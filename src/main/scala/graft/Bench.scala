@@ -23,15 +23,14 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet paths so the first measured query is
-    // not charged one-time session startup, and touch every table once so
-    // no measured query pays the first file-listing/footer read.
+    // not charged one-time session startup, and touch every table once,
+    // through the same read path the queries take, so no measured query
+    // pays the first file-listing/footer read.
     try {
-      spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
+      Tables.region(spark, sfDir).groupBy("r_name").count().count()
       spark.range(1000).selectExpr("sum(id)").count()
-      for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings"))
-        spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
-      spark.read.parquet(s"$sfDir/events.parquet").limit(1).count()
+      for (t <- Tables.schemas.keys) Tables.table(spark, sfDir, t).limit(1).count()
+      Tables.events(spark, sfDir).limit(1).count()
     } catch { case _: Throwable => () }
     // One untimed pass of the whole catalog first: each query's first run
     // pays one-time janino codegen compilation and AQE stage planning

@@ -303,6 +303,9 @@ object ExtensionQueries {
   // rehearsals. Counters, not behavior: the memo itself is the mechanism.
   private[graft] val pairsBuilds = new java.util.concurrent.atomic.AtomicInteger
   private[graft] val pairsReads = new java.util.concurrent.atomic.AtomicInteger
+  /** The schema the artifact is written with, so reading it back infers nothing. */
+  private[graft] val pairsSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("a bigint, b bigint, jaccard double")
   private[graft] def nearDupPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val path = pairsMemo.computeIfAbsent(dir, _ => {
@@ -319,7 +322,7 @@ object ExtensionQueries {
       out
     })
     pairsReads.incrementAndGet()
-    s.read.parquet(path)
+    s.read.schema(pairsSchema).parquet(path)
   }
 
   private val pqMemo =

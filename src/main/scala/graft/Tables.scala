@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-supplied parquet tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -9,11 +10,40 @@ import org.apache.spark.sql.functions._
   * so the same query code runs at every SF. Column pruning / predicate
   * pushdown is left to Catalyst — callers `select`/`filter` and the parquet
   * scan prunes (verified via `explain`: `ReadSchema` / `PushedFilters`).
+  *
+  * The nine fixed tables are read with the schemas declared in [[schemas]],
+  * the way the reference declares the type of every topic it reads
+  * (typed serdes): a bare `spark.read.parquet` runs one schema-inference
+  * Spark job per read, before the query's own action. A declared column
+  * the file lacks reads as NULL without an error; TablesSchemaSpec pins
+  * every declared schema to the inferred one on each fixture SF. `events`
+  * alone is still inferred (see [[events]]).
   */
 object Tables {
 
+  /** FIXTURES.md §B, exactly as Spark infers it from the fixture files. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey int, r_name string",
+    "nation" -> "n_nationkey int, n_name string, n_regionkey int",
+    "customer" -> ("c_custkey bigint, c_name string, c_nationkey int, " +
+      "c_acctbal double, c_mktsegment string"),
+    "supplier" -> "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part" -> ("p_partkey bigint, p_name string, p_brand string, p_type string, " +
+      "p_size int, p_retailprice double"),
+    "orders" -> ("o_orderkey bigint, o_custkey bigint, o_orderstatus string, " +
+      "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"),
+    "lineitem" -> ("l_orderkey bigint, l_partkey bigint, l_suppkey bigint, " +
+      "l_linenumber int, l_quantity double, l_extendedprice double, " +
+      "l_discount double, l_tax double, l_returnflag string, " +
+      "l_linestatus string, l_shipdate timestamp_ntz"),
+    "documents" -> ("doc_id bigint, text string, lang string, source string, " +
+      "n_chars bigint"),
+    "embeddings" -> "vec_id bigint, embedding array<float>, label int"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    schemas.get(name).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -28,7 +58,8 @@ object Tables {
   /** `events.ts` has shipped in two physical parquet types across testdata
     * generations: INT64 TIMESTAMP(NANOS) (readable only under
     * `spark.sql.legacy.parquet.nanosAsLong=true`, arriving as epoch-nano
-    * bigint) and TIMESTAMP(µs) / TIMESTAMP_NTZ. [[normalizeEvents]] maps
+    * bigint) and TIMESTAMP(µs) / TIMESTAMP_NTZ, so `events` has no entry in
+    * [[schemas]] and its read infers. [[normalizeEvents]] maps
     * either onto one engine-side contract so every consumer is
     * generation-agnostic:
     *  - `ts`    — epoch NANOseconds, bigint (the original engine contract;

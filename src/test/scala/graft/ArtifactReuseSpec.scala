@@ -46,4 +46,12 @@ class ArtifactReuseSpec extends SparkSpec {
     assert(!plan.toLowerCase.contains("join"),
       s"consumer plan should be a scan, got:\n$plan")
   }
+
+  test("the artifact is read back with the schema it was written with") {
+    val df = ExtensionQueries.nearDupPairs(spark, dir)
+    // a declared column the files lack would read as NULL, silently
+    val inferred = spark.read.parquet(df.inputFiles.toSeq: _*).schema
+    assert(df.schema == inferred)
+    assert(ExtensionQueries.pairsSchema == inferred)
+  }
 }
