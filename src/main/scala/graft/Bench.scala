@@ -9,19 +9,7 @@ object Bench {
     // per-partition bytes the configs were sized for — more partitions at
     // the same thread count is the cluster-correct lever (see DevBench).
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, read once at CodeGenerator init: the default 100-entry
-      // janino class cache cannot hold a 144-query catalog — by the timed
-      // pass every complex plan's classes were evicted by the other 143
-      // queries' warmup, so each heavy query paid seconds of recompilation
-      // the warmup pass was supposed to amortize
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(cpus.toInt, shuffleParts.toInt)
     // Warm the JVM/codegen/parquet paths so the first measured query is
     // not charged one-time session startup, and touch every table once,
     // through the same read path the queries take, so no measured query
@@ -111,11 +99,6 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     // a query that fails in BOTH timed rounds lands in `errors` twice —
     // dedupe by name so the JSON object has unique keys and n_errors
     // counts failing queries, not failing attempts
@@ -155,4 +138,19 @@ object Bench {
       s"reads=${ExtensionQueries.pairsReads.get()}")
     spark.stop()
   }
+
+  /** JSON string literal (Bench's error map, Verify's oracle_sql.json):
+    * escapes backslash, quote and ALL control chars (<0x20) — a tab or CR
+    * in a catalog entry's SQL would otherwise make `json.load` of
+    * oracle_sql.json fail and silently zero an oracle compare.
+    */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

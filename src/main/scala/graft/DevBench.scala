@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop harness: time (and optionally explain) a subset of the query
   * catalog. Not part of the driver contract — `Bench` is the official
   * benchmark; this exists so a single query can be iterated on without
@@ -22,15 +20,7 @@ object DevBench {
     // OOMs — more partitions, same parallelism, is the cluster-correct
     // lever. The driver never sets this, so recorded benches use cpus.
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // see Bench
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(cpus.toInt, shuffleParts.toInt)
     val sel = if (names.isEmpty) SparkEntry.queries
               else SparkEntry.queries.filter { case (n, _) => names.contains(n) }
     // -rN: run each query N times (first iteration carries janino-compile /

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Graph}
 
@@ -28,15 +27,7 @@ import graft.ops.{Dedup, Graph}
 object DevScale {
   def main(args: Array[String]): Unit = {
     val Array(bigDir, midDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32)
     var failed = false
     def report(name: String, ok: Boolean, detail: String): Unit = {
       if (!ok) failed = true

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.Topologies
 
@@ -55,17 +55,13 @@ object DevStreamScale {
       s"topology must be paidOrders|trending|curate, got $topology")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rocks = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    if (rocks) builder.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = Engine.local(cpus.toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt)
+    // a runtime SQL conf, read when a stream starts (and then pinned in
+    // its checkpoint's offset log), so setting it before the first start
+    // is equivalent to building the session with it
+    if (rocks) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val persistent = workDirArg.isDefined
     val work = workDirArg.map { p =>
       val f = new java.io.File(p); f.mkdirs(); f

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale-factor synthesizer (NOT part of the library surface):
@@ -111,14 +111,7 @@ object DevSynth {
       s"profile must be benign|hostile|hostile-nullid, got $profile")
     val hostile = profile.startsWith("hostile")
     val nullIds = profile == "hostile-nullid"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32)
     val stride = 100000000L // far above any source key
 
     new java.io.File(outDir).mkdirs()

@@ -38,6 +38,28 @@ object Engine extends org.apache.spark.internal.Logging {
       case (b, (k, v)) => b.config(k, v)
     }
 
+  /** The repo's own processes' session (Bench, Verify, the dev mains, the
+    * test fixture): [[builder]] on `local[cores]`, UI off, WARN logging.
+    * `spark.sql.codegen.cache.maxEntries` is a static conf read once at
+    * CodeGenerator init: the default 100-entry janino class cache cannot
+    * hold the catalog, so by a timed pass every complex plan's classes
+    * were evicted by the other queries' warmup and each heavy query paid
+    * seconds of recompilation.
+    */
+  def local(cores: Int, shufflePartitions: Int): SparkSession = {
+    val s = builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** [[local]] with one shuffle partition per core. */
+  def local(cores: Int): SparkSession = local(cores, cores)
+
   /** Build (or join) the session and make the SQL function surface
     * available even when the session pre-existed this call (extensions
     * only apply at session creation; programmatic registration is

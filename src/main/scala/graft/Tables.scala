@@ -72,9 +72,10 @@ object Tables {
     *    `session_window()` (session TZ is UTC).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // The engine's entry points (Verify/Bench/DevBench) set this at session
-    // build; the guarded set here covers ad-hoc sessions (tests, shells)
-    // without re-mutating an already-configured session on every call.
+    // Engine's sessions (Engine.builder, hence Engine.local: the mains and
+    // the tests) carry this from session build; the guarded set here
+    // covers other sessions (shells) without re-mutating an
+    // already-configured session on every call.
     // Harmless when the files carry a plain timestamp instead of nanos.
     if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -251,8 +251,9 @@ object XPipelineQueries {
           col("text"), Texts.enStopwords))
         // NO localCheckpoint before the rank, deliberately: the range
         // sample and offsets jobs column-prune to (doc_id, source), so
-        // the heavy gate expressions don't re-run for them (DevV5Probe:
-        // checkpoint was neutral at sf3, ~2x at sf0.1)
+        // the heavy gate expressions don't re-run for them (BASELINE.md
+        // "v5 gate short-circuit": checkpoint was neutral at sf3, ~2x at
+        // sf0.1)
         val surv = Dedup.exact(Seq(md5(col("text"))), col("doc_id"))(gated)
           .select(col("doc_id"), col("source"))
         TextAnalysis.perSourceRank(col("doc_id"), col("source"), "v5")(surv)

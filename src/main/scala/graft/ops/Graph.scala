@@ -43,9 +43,10 @@ object Graph {
     * `broadcastMaxNodes` picks the distributed rank-join regime (see
     * [[pageRankDistributed]]). The default is 0 — the co-partitioned
     * SHUFFLE_HASH regime always — because the broadcast regime LOST the
-    * A/B at both measured scales (DevGraph `regimes`, idle local[32]:
-    * 18.1 s vs 12.6 s at 200k nodes / 23.9M edges; 307 s vs 256 s at 2M
-    * nodes / 239M edges, 8 iterations each): a per-round broadcast
+    * A/B at both measured scales (BASELINE.md "Round 11: PageRank
+    * regimes A/B at scale", idle local[32]: 18.1 s vs 12.6 s at 200k
+    * nodes / 23.9M edges; 307 s vs 256 s at 2M nodes / 239M edges, 8
+    * iterations each): a per-round broadcast
     * re-collects the |V|-sized rank vector to the driver and rebuilds
     * the hash table on every executor, while the shuffle regime pays one
     * partitioned |V| exchange and streams the stationary edge cache. On

@@ -24,17 +24,4 @@ object GraftSqlBridge {
         name, org.apache.spark.sql.internal.SQLConf.get)
       true
     } catch { case _: Throwable => false }
-
-  /** Materialize the check rules an extensions installer would inject —
-    * `SparkSessionExtensions.buildCheckRules` is `private[sql]`, and tests
-    * need it to exercise the `spark.sql.extensions` wiring without
-    * building a second SparkSession (getOrCreate would return the active
-    * one, silently skipping the extensions).
-    */
-  def buildCheckRules(installer: SparkSessionExtensions => Unit,
-      session: SparkSession): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit] = {
-    val ext = new SparkSessionExtensions
-    installer(ext)
-    ext.buildCheckRules(session)
-  }
 }

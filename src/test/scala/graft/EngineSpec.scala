@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 /** The session front door: configs-as-data and function availability. */
 class EngineSpec extends SparkSpec {
 
@@ -10,14 +13,38 @@ class EngineSpec extends SparkSpec {
     assert(ext.contains("GraftSparkExtensions") && ext.contains("GraftGuardrails"))
   }
 
+  test("Engine.local sessions carry every sessionConfigs entry") {
+    // the shared fixture is Engine.local(4) — the same factory Bench and
+    // Verify build their sessions with
+    for ((k, v) <- Engine.sessionConfigs)
+      assert(spark.conf.get(k) === v, k)
+  }
+
   test("session() exposes the SQL function surface even on a pre-existing session") {
-    // the shared test session predates this call — extensions can't apply,
-    // so session() must fall back to programmatic registration
-    val s = Engine.session()
-    val r = s.sql("SELECT quality_score('A clean, well formed sentence.') AS q")
-      .collect()(0)
-    assert(!r.isNullAt(0))
-    // idempotent: calling again must not throw on re-registration
-    Engine.session()
+    val probe = "SELECT quality_score('A clean, well formed sentence.') AS q"
+    // a session that lacks the function: the shared one, minus it
+    spark.sql("DROP TEMPORARY FUNCTION quality_score")
+    try {
+      intercept[org.apache.spark.sql.AnalysisException] { spark.sql(probe).collect() }
+      // session() joins that session — extensions can't apply to it, so
+      // session() must fall back to programmatic registration
+      val s = Engine.session()
+      assert(s eq spark)
+      assert(!s.sql(probe).collect()(0).isNullAt(0))
+      // idempotent: calling again must not throw on re-registration
+      Engine.session()
+    } finally graft.functions.GraftFunctions.register(spark)
+  }
+
+  test("Engine.scala is the only place a SparkSession builder is made") {
+    val needle = "SparkSession" + ".builder()"
+    def scalaFiles(root: String): Seq[Path] =
+      scala.util.Using.resource(Files.walk(Paths.get(root))) {
+        _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      }
+    val hits = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(_.getFileName.toString)
+    assert(hits === Seq("Engine.scala"))
   }
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared SparkSession fixture for all suites: small local parallelism,
-  * UTC (matches the DuckDB oracle session), AQE left on (the production
-  * config under test).
+/** Shared SparkSession fixture for all suites: the repo's own session
+  * ([[Engine.local]] — UTC, which matches the DuckDB oracle session, the
+  * function and guardrail extensions, AQE left on) at small local
+  * parallelism.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -18,15 +19,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Engine.local(4)
 }
