@@ -131,11 +131,8 @@ object Bench {
     }
     println(fullJson)
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errList.size},"sf":"$sfDir"}""")
-    // Scale-rehearsal telemetry (stderr, not the JSON contract): the
-    // shared near-dup pair artifact's written-once/read-N counters
-    System.err.println(s"[graft] near-dup artifact tallies: " +
-      s"builds=${ExtensionQueries.pairsBuilds.get()} " +
-      s"reads=${ExtensionQueries.pairsReads.get()}")
+    // artifact build/read counters (stderr, not the JSON contract)
+    System.err.println(s"[graft] artifact tallies: ${Artifact.tallies}")
     spark.stop()
   }
 

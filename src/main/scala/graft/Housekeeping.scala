@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * components still owned — in particular memoized checkpointed
   * artifacts, which are unrecoverable once their blocks vanish (lineage
   * is truncated) — and silently broke every later consumer in the same
-  * JVM. Engine memos now hold driver-side values only (rebuildable), but
+  * JVM. [[Artifact]]s now hold driver-side values only (rebuildable), but
   * the scoped discipline stays: housekeeping must never free what it did
   * not allocate.
   */

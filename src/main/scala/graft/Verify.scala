@@ -27,12 +27,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // Scale-rehearsal telemetry for the shared near-dup pair artifact
-    // ("written once, read N times" — ArtifactReuseSpec pins the contract,
-    // this line records it per run so BASELINE.md can quote real counts)
-    System.err.println(s"[graft] near-dup artifact tallies: " +
-      s"builds=${ExtensionQueries.pairsBuilds.get()} " +
-      s"reads=${ExtensionQueries.pairsReads.get()}")
+    // one line of artifact build/read counters
+    System.err.println(s"[graft] artifact tallies: ${Artifact.tallies}")
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -249,18 +249,23 @@ object XDedupQueries {
       // blocks via zipped unnest + subscripts, NOT range-unnest with the
       // token array carried per row: the carried-array form duplicated
       // each doc's whole token list onto every block row and OOM'd
-      // DuckDB's 100 GiB limit at sf10; this form is linear in tokens
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-             |tok AS (SELECT doc_id, unnest(t) AS tok,
-             |          generate_subscripts(t, 1) AS pos FROM toks),
-             |blk AS (SELECT doc_id, idx, string_agg(tok, ' ' ORDER BY pos) AS b
-             |        FROM (SELECT doc_id, tok, pos,
+      // DuckDB's 100 GiB limit at sf10; this form is linear in tokens.
+      // Per-row and total like the engine: aggregates key on a row
+      // surrogate (NULL doc_ids must not merge) and every document is
+      // outer-joined back, so a NULL-text doc keeps a NULL clean_text
+      Some("""WITH d AS MATERIALIZED (SELECT row_number() OVER () AS rid,
+             |         doc_id, string_split(text, ' ') AS t FROM documents),
+             |tok AS (SELECT rid, unnest(t) AS tok,
+             |          generate_subscripts(t, 1) AS pos FROM d),
+             |blk AS (SELECT rid, idx, string_agg(tok, ' ' ORDER BY pos) AS b
+             |        FROM (SELECT rid, tok, pos,
              |                CAST((pos - 1) // 2 AS INT) AS idx FROM tok)
-             |        GROUP BY doc_id, idx),
-             |firsts AS (SELECT doc_id, b, min(idx) AS idx FROM blk
-             |           GROUP BY doc_id, b)
-             |SELECT doc_id, string_agg(b, ' ' ORDER BY idx) AS clean_text
-             |FROM firsts GROUP BY doc_id""".stripMargin),
+             |        GROUP BY rid, idx),
+             |firsts AS (SELECT rid, b, min(idx) AS idx FROM blk
+             |           GROUP BY rid, b),
+             |ct AS (SELECT rid, string_agg(b, ' ' ORDER BY idx) AS clean_text
+             |       FROM firsts GROUP BY rid)
+             |SELECT d.doc_id, ct.clean_text FROM d LEFT JOIN ct USING (rid)""".stripMargin),
       "X1 intra-document repeated-block trim: first occurrence of each " +
         "distinct 2-token block survives, in order — the within-doc cut for " +
         "looping/template pages; per-doc aggregates only, no join, no window"),

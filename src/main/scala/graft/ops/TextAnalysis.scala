@@ -1030,17 +1030,6 @@ object TextAnalysis {
       .filter(col("cnt") >= threshold)
   }
 
-  /** [[heavyHitters]] over a caller-owned broadcast handle — kept for API
-    * compatibility with sessions that already manage the sketch as a
-    * broadcast; the probe itself no longer needs one (the codegen
-    * expression rides the stage's task binary).
-    */
-  def heavyHitters(text: Column, threshold: Long,
-      cmsB: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.CountMinSketch])(
-      df: DataFrame): DataFrame =
-    heavyHitters(text, threshold, cmsB.value)(df)
-
   /** Corpus-frequent block removal — the C4-style boilerplate cut, at block
     * rather than line granularity (the fixture's documents are single-line):
     * split each document into fixed `blockTokens`-token blocks (ragged

@@ -22,6 +22,8 @@ import graft.ops.{Clustering, Multimodal, Relational, Sequences, Similarity, Tex
   *  - Multimodal extraction drops NULL payloads instead of NPE-ing.
   *  - fingerprints: a NULL-text doc gets NULL digests, never the digest
   *    of the EMPTY string (which would alias genuinely empty docs).
+  *  - x30's within-doc block trim is total: a NULL-text doc keeps its row
+  *    with a NULL `clean_text`, and NULL-id docs never merge.
   */
 class HostileDataSpec extends SparkSpec {
   import spark.implicits._
@@ -178,5 +180,16 @@ class HostileDataSpec extends SparkSpec {
       assert(rows3(fn(df)) === rows3(fn(clean)), s"$name diverged on NULL-id rows")
       assert(rows3(fn(df)).nonEmpty, s"$name found no pairs at all")
     }
+  }
+
+  test("dedupBlocksWithinDoc keeps a NULL-text doc as a row with NULL clean_text") {
+    val rows = Seq[(java.lang.Long, String)](
+      (1L, "a b a b c"), (2L, null), (null, null), (null, "x y x y"))
+    val out = TextAnalysis.dedupBlocksWithinDoc(col("doc_id"), col("text"), 2)(
+        rows.toDF("doc_id", "text"))
+      .collect().map(r => (Option(r.get(0)), Option(r.getString(1)))).toSeq
+    assert(out.sortBy(_.toString) === Seq[(Option[Any], Option[String])](
+      (None, None), (None, Some("x y")), (Some(1L), Some("a b c")), (Some(2L), None))
+      .sortBy(_.toString))
   }
 }
