@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The library's session front door: one place that encodes how a graft
   * session should be configured, for users switching from the reference
-  * engine (SURVEY §4.3). Everything here is a plain Spark config — no
-  * custom runtime — so the same settings work on a 1000-executor cluster
-  * submit as on `local[*]` development.
+  * engine (SURVEY §4.3). Everything here is a Spark config, so the same
+  * settings work on a 1000-executor cluster submit as on `local[*]`
+  * development; the filesystem keys name classes of this library, so
+  * every JVM that resolves `file:` paths needs its jar on the classpath.
   *
   *  - UTC session time zone: timestamps compare identically across
   *    engines and clusters regardless of driver locale.
@@ -20,6 +21,12 @@ import org.apache.spark.sql.SparkSession
   *    `quality_score`, …) and the cartesian guardrail
   *    ([[graft.plans.GraftGuardrails]], armed per-session via
   *    `spark.graft.failOnCartesian`).
+  *  - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` select the
+  *    fork-free local filesystem ([[ForklessLocalFs]]): without `libhadoop`
+  *    the stock one starts a `chmod`/`readlink` process per checkpoint
+  *    file. `fs.file.impl` applies only if no `file:` FileSystem was
+  *    cached earlier in the JVM; FileContext (checkpoint) I/O reads the
+  *    conf every time.
   */
 object Engine extends org.apache.spark.internal.Logging {
 
@@ -30,7 +37,9 @@ object Engine extends org.apache.spark.internal.Logging {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.extensions" ->
-      "graft.functions.GraftSparkExtensions,graft.plans.GraftGuardrails")
+      "graft.functions.GraftSparkExtensions,graft.plans.GraftGuardrails",
+    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForklessLocalFs].getName)
 
   /** A pre-configured builder; caller picks master/app/overrides. */
   def builder(): SparkSession.Builder =

@@ -102,6 +102,9 @@ object Dedup {
     * Same contract in [[containmentPairs]] and both naive twins; pinned
     * by HostileDataSpec and the hostile-nullid fixture sweep.
     *
+    * @param id document key; must be non-NULL. A NULL-id row is dropped
+    *        before the shingle document frequencies are counted, so it
+    *        neither pairs nor counts toward `maxShingleDf`.
     * @param maxShingleDf drop shingles occurring in more than this many docs
     *        before pairing (0 = keep all). Still useful above the prefix
     *        filter: it bounds the worst surviving join group and shrinks
@@ -232,6 +235,10 @@ object Dedup {
     * 15.8 s at sf1 → 56.9 s at sf3 (3.6× at 3× data, sub-quadratic) on
     * the dup-dense DevSynth rehearsal corpus; the exact-oracle gate
     * re-verifies every emitted pair at each SF.
+    *
+    * @param id document key; must be non-NULL. A NULL-id row is dropped
+    *        before the shingle document frequencies are counted, so it
+    *        neither pairs nor counts toward `maxShingleDf`.
     */
   def containmentPairs(id: Column, text: Column, n: Int, threshold: Double,
       maxShingleDf: Long = 0L)(df: DataFrame): DataFrame = {

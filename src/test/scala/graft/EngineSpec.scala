@@ -1,5 +1,6 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -11,6 +12,20 @@ class EngineSpec extends SparkSpec {
     assert(Engine.sessionConfigs("spark.sql.legacy.parquet.nanosAsLong") === "true")
     val ext = Engine.sessionConfigs("spark.sql.extensions")
     assert(ext.contains("GraftSparkExtensions") && ext.contains("GraftGuardrails"))
+  }
+
+  test("sessionConfigs route local file: I/O through the fork-free filesystem") {
+    assert(Engine.sessionConfigs("spark.hadoop.fs.file.impl") ===
+      classOf[ForklessLocalFileSystem].getName)
+    assert(Engine.sessionConfigs("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+      classOf[ForklessLocalFs].getName)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // FileSystem API (the parquet sink): the JVM-cached instance
+    assert(org.apache.hadoop.fs.FileSystem.get(URI.create("file:///"), conf).getClass ===
+      classOf[ForklessLocalFileSystem])
+    // FileContext API (checkpoint logs and state stores)
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(URI.create("file:///"), conf)
+      .getDefaultFileSystem.getClass === classOf[ForklessLocalFs])
   }
 
   test("Engine.local sessions carry every sessionConfigs entry") {
