@@ -15,8 +15,9 @@ import graft.streaming.Topologies
   *
   * Usage: `runMain graft.DevStreamScale <sfDir> [paidOrders|trending|curate]
   *   [workDir]`
-  *  - `paidOrders` (default): the flagship stream–stream join topology,
-  *    orders/payments as chronological YEARLY files.
+  *  - `paidOrders` (default): the flagship topology (J3 is a keyed
+  *    interval co-group of orders and payments), orders/payments as
+  *    chronological YEARLY files.
   *  - `trending`: the chained-aggregation topology (windowed count →
   *    per-window argmax — TWO stateful aggs back to back), events as
   *    chronological DAILY files (the fixture spans one month), append

@@ -7,8 +7,8 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -74,4 +74,12 @@ class ForklessLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
     override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def isValidName(src: String): Boolean = true
-  })
+  }) {
+
+  /** `FileContext.open` calls this overload, which `FilterFs` sends to the
+    * raw file and so skips the `.crc` check that `ChecksumFs.open(Path,
+    * Int)` makes; route it through the checked one. A file without a
+    * sidecar still reads, unchecked, as there.
+    */
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

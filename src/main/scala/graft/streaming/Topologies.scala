@@ -1,7 +1,13 @@
 package graft.streaming
 
+import java.sql.Timestamp
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.Relational
 
 /** The reference's five topologies (KSA = reference
@@ -18,7 +24,10 @@ import graft.ops.Relational
   *  - KTable results (A1 count, A2 windowed aggregate) → `update` output
   *    mode: each micro-batch emits refreshed rows = `ktable.toStream`
   *    (A3, KSA:150) continuous changelog emission.
-  *  - Stream-stream join results (flagship) → `append` (engine rule).
+  *  - Flagship results (the J3 order–payment interval join) → `append`:
+  *    a matched pair is emitted once, when its later side arrives; an
+  *    unmatched side of an outer variant once, when the watermark passes
+  *    its interval.
   *
   * Input column contracts are the [[OrderEvent]]/[[PaymentEvent]] case
   * classes.
@@ -151,27 +160,27 @@ object Topologies {
     *    Joiner applies `amount * discount.amount` (KSA:170).
     *  - P4 (KSA:173): re-key by orderId — declared by selection; the
     *    exchange materializes at the next keyed operator.
-    *  - J3 (KSA:177-186): ⋈ payments within ±`joinWindow`, both sides
-    *    watermarked (symmetric bounds ⇒ both states are prunable).
-    *  - J4 (KSA:179-180, 185): Option-joiner → residual `status = PAID`.
+    *  - J3 (KSA:177-186): ⋈ payments within ±`joinWindow` (bounds
+    *    inclusive), as ONE keyed co-group ([[intervalJoin]]) — how Kafka
+    *    Streams backs `KStream.join(…, JoinWindows)`: one windowed store
+    *    per key, one state store per shuffle partition.
+    *  - J4 (KSA:179-180, 185): Option-joiner → residual `status = PAID`,
+    *    applied to the payments before J3 (legal for an inner join).
     *
-    * Streaming output is append-only (stream-stream join rule); the
-    * batch application of this same function is the oracle fixpoint.
+    * Streaming output is append-only; the batch application of this same
+    * function is the oracle fixpoint.
     */
   def paidOrders(orders: DataFrame, payments: DataFrame, profiles: DataFrame,
       discounts: DataFrame, joinWindow: String = "5 minutes"): DataFrame =
-    enrichedRekeyed(orders, profiles, discounts, joinWindow)
-      .join(watermarkedPayments(payments, joinWindow),
-        expr(intervalCond(joinWindow)))
-      .filter(col("status") === "PAID")
-      .select(col("orderId"), col("user"), col("profile"), col("amount"), col("status"))
+    intervalJoin(enrichedRekeyed(orders, profiles, discounts, joinWindow),
+      payments.filter(col("status") === "PAID"), joinWindow, "inner")
 
   /** Left-outer flagship variant — "orders with OR without payment", the
     * DSL `leftJoin` surface the reference leaves unused (SURVEY §2.4).
-    * Same stages as [[paidOrders]], but the J3 payment join keeps
-    * unmatched orders with null payment columns, and the PAID residual
-    * moves INTO the join condition: applied after an outer join it would
-    * drop exactly the null-padded rows the outer join exists to emit.
+    * Same stages as [[paidOrders]], but J3 keeps unmatched orders with a
+    * null `status`. The PAID residual belongs to the ON clause (applied
+    * after an outer join it would drop exactly the null-padded rows the
+    * outer join exists to emit), so it still pre-filters the payments.
     *
     * Streaming semantics: an unmatched order is emitted (null-padded)
     * only once the watermark passes the end of its join interval — the
@@ -182,26 +191,22 @@ object Topologies {
     */
   def paidOrdersLeftOuter(orders: DataFrame, payments: DataFrame, profiles: DataFrame,
       discounts: DataFrame, joinWindow: String = "5 minutes"): DataFrame =
-    enrichedRekeyed(orders, profiles, discounts, joinWindow)
-      .join(watermarkedPayments(payments, joinWindow),
-        expr(intervalCond(joinWindow) + " AND status = 'PAID'"), "left_outer")
-      .select(col("orderId"), col("user"), col("profile"), col("amount"), col("status"))
+    intervalJoin(enrichedRekeyed(orders, profiles, discounts, joinWindow),
+      payments.filter(col("status") === "PAID"), joinWindow, "left_outer")
 
   /** Full-outer flagship variant — the DSL `outerJoin`: every order AND
     * every payment appears, null-padded when the other side never arrives
     * inside the interval. No status residual here (with an outer join a
     * failed residual would null-pad BOTH sides of a matched pair — the
-    * filtered-join composition belongs to the inner/left flavors); the
-    * emitted key is whichever side is present. Same watermark-expiry
-    * emission discipline as [[paidOrdersLeftOuter]], on both states.
+    * filtered-join composition belongs to the inner/left flavors); an
+    * unmatched payment carries its own orderId (the group key). Same
+    * watermark-expiry emission discipline as [[paidOrdersLeftOuter]], on
+    * both sides.
     */
   def paidOrdersFullOuter(orders: DataFrame, payments: DataFrame, profiles: DataFrame,
       discounts: DataFrame, joinWindow: String = "5 minutes"): DataFrame =
-    enrichedRekeyed(orders, profiles, discounts, joinWindow)
-      .join(watermarkedPayments(payments, joinWindow),
-        expr(intervalCond(joinWindow)), "full_outer")
-      .select(coalesce(col("key"), col("p_orderId")).as("orderId"),
-        col("user"), col("profile"), col("amount"), col("status"))
+    intervalJoin(enrichedRekeyed(orders, profiles, discounts, joinWindow),
+      payments, joinWindow, "full_outer")
 
   /** Shared J1→J2→P4 prefix of the flagship: profile snapshot join,
     * broadcast discount join with the discount applied, re-key by orderId.
@@ -219,13 +224,98 @@ object Topologies {
     Relational.selectKey(col("orderId"), "key")(discounted)
   }
 
-  private def watermarkedPayments(payments: DataFrame, joinWindow: String): DataFrame =
-    payments
-      .withColumnRenamed("orderId", "p_orderId")
-      .withColumnRenamed("ts", "pts")
-      .withWatermark("pts", joinWindow)
-
-  private def intervalCond(joinWindow: String): String =
-    s"key = p_orderId AND pts BETWEEN ts - INTERVAL $joinWindow " +
-      s"AND ts + INTERVAL $joinWindow"
+  /** J3: `key = payment.orderId AND payment.ts BETWEEN ts ± joinWindow`,
+    * as one `flatMapGroupsWithState` over the union of both sides keyed by
+    * orderId (the [[Stateful.streamTableJoinExact]] pattern). `joinType`
+    * is `inner`, `left_outer` or `full_outer`.
+    *
+    * Per key the state buffers both sides. New orders probe the old and
+    * the new payments, new payments only the old orders, so each pair is
+    * emitted once. A row is pruned once `ts + joinWindow < watermark` —
+    * no admissible row can match it any more — and an unmatched pruned
+    * row is emitted null-padded if its side is kept. The event-time
+    * timeout sits on the earliest buffered `ts + joinWindow`, so a quiet
+    * key still prunes on a no-data batch. Both inputs keep their own
+    * watermark (the global one is their minimum, as for a stream-stream
+    * join), and rows at or below the previous batch's watermark are
+    * dropped as late. A row with a NULL key or time matches nothing; a
+    * NULL-time row can never be pruned, so an outer side emits it at once.
+    * In batch there is no watermark: everything expires at the end of
+    * its group.
+    */
+  private def intervalJoin(enriched: DataFrame, payments: DataFrame, joinWindow: String,
+      joinType: String): DataFrame = {
+    val spark = enriched.sparkSession
+    import spark.implicits._
+    val (keepOrders, keepPayments) = (joinType != "inner", joinType == "full_outer")
+    val streaming = enriched.isStreaming
+    val w = IntervalUtils.getDuration(
+      IntervalUtils.stringToInterval(UTF8String.fromString(joinWindow)), TimeUnit.MILLISECONDS)
+    val nul = lit(null).cast("string")
+    val events = enriched.select(col("key"), lit(false).as("isPayment"), col("ts"),
+        col("user"), col("profile"), col("amount").cast("double").as("amount"), nul.as("status"))
+      .unionByName(payments.withWatermark("ts", joinWindow).select(col("orderId").as("key"),
+        lit(true).as("isPayment"), col("ts"), nul.as("user"), nul.as("profile"),
+        lit(null).cast("double").as("amount"), col("status")))
+    val timeout = if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
+    events.as[J3Event].groupByKey(_.key)
+      .flatMapGroupsWithState[J3Buf, PaidOrder](OutputMode.Append(), timeout) {
+        (key: String, in: Iterator[J3Event], state: GroupState[J3Buf]) =>
+          val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
+          val prev = state.getOption.getOrElse(J3Buf(Nil, Nil))
+          val (timed, untimed) = in.toSeq.partition(_.ts != null)
+          val out = Seq.newBuilder[PaidOrder]
+          def order(o: J3Order, status: String) = PaidOrder(key, o.user, o.profile, o.amount, status)
+          def payment(status: String) = PaidOrder(key, null, null, None, status)
+          untimed.foreach { e =>
+            if (!e.isPayment && keepOrders) out += PaidOrder(key, e.user, e.profile, e.amount, null)
+            if (e.isPayment && keepPayments) out += payment(e.status)
+          }
+          val (newPays, newOrds) = timed.partition(_.isPayment)
+          val ords = (prev.orders ++ newOrds.map(e =>
+            J3Order(e.ts.getTime, e.user, e.profile, e.amount, matched = false))).toArray
+          val pays = (prev.payments ++ newPays.map(e =>
+            J3Payment(e.ts.getTime, e.status, matched = false))).toArray
+          def probe(i: Int, j: Int): Unit =
+            if (key != null && math.abs(ords(i).tsMs - pays(j).tsMs) <= w) {
+              out += order(ords(i), pays(j).status)
+              ords(i) = ords(i).copy(matched = true)
+              pays(j) = pays(j).copy(matched = true)
+            }
+          for (i <- prev.orders.size until ords.length; j <- pays.indices) probe(i, j)
+          for (j <- prev.payments.size until pays.length; i <- prev.orders.indices) probe(i, j)
+          val (liveOrds, goneOrds) = ords.toSeq.partition(_.tsMs + w >= wm)
+          val (livePays, gonePays) = pays.toSeq.partition(_.tsMs + w >= wm)
+          if (keepOrders) goneOrds.filterNot(_.matched).foreach(o => out += order(o, null))
+          if (keepPayments) gonePays.filterNot(_.matched).foreach(p => out += payment(p.status))
+          if (liveOrds.isEmpty && livePays.isEmpty) state.remove()
+          else {
+            state.update(J3Buf(liveOrds, livePays))
+            if (streaming)
+              state.setTimeoutTimestamp((liveOrds.map(_.tsMs) ++ livePays.map(_.tsMs)).min + w)
+          }
+          out.result().iterator
+      }
+      .toDF()
+  }
 }
+
+/** J3's co-group envelope: an enriched order (`isPayment = false`) or a
+  * payment, keyed by orderId.
+  */
+private[streaming] final case class J3Event(key: String, isPayment: Boolean, ts: Timestamp,
+    user: String, profile: String, amount: Option[Double], status: String)
+
+/** A buffered J3 order; `matched` once it has joined a payment. */
+private[streaming] final case class J3Order(tsMs: Long, user: String, profile: String,
+    amount: Option[Double], matched: Boolean)
+
+/** A buffered J3 payment; `matched` once it has joined an order. */
+private[streaming] final case class J3Payment(tsMs: Long, status: String, matched: Boolean)
+
+/** J3's per-orderId state: the orders and payments not yet pruned. */
+private[streaming] final case class J3Buf(orders: Seq[J3Order], payments: Seq[J3Payment])
+
+/** One flagship output row. */
+private[streaming] final case class PaidOrder(orderId: String, user: String, profile: String,
+    amount: Option[Double], status: String)

@@ -119,6 +119,30 @@ class ForklessLocalFsSpec extends SparkSpec {
     intercept[ChecksumException](readBack())
   }
 
+  test("FileContext.open through ForklessLocalFs verifies the .crc sidecar; a file without one reads") {
+    val conf = new Configuration()
+    conf.set("fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
+    val dir = Files.createTempDirectory("graft-forkless-open")
+    val fc = FileContext.getFileContext(dir.toUri, conf)
+    def readBack(p: JPath): Array[Byte] = {
+      val in = fc.open(new Path(p.toUri))
+      try in.readAllBytes() finally in.close()
+    }
+    val bytes = "commit log entry".getBytes("UTF-8")
+    val out = fc.create(new Path(dir.resolve("1").toUri), EnumSet.of(CreateFlag.CREATE))
+    out.write(bytes)
+    out.close()
+    assert(Files.exists(dir.resolve(".1.crc")))
+    assert(readBack(dir.resolve("1")) === bytes)
+    // flip one byte in place: the checkpoint read path must catch it
+    Files.write(dir.resolve("1"), bytes.updated(0, 'C'.toByte))
+    intercept[ChecksumException](readBack(dir.resolve("1")))
+    // written outside Hadoop, so no sidecar: read unchecked
+    val plain = Files.write(dir.resolve("plain"), bytes)
+    assert(!Files.exists(dir.resolve(".plain.crc")))
+    assert(readBack(plain) === bytes)
+  }
+
   /** `Topologies.paidOrders` from JSON file sources (one file per source
     * per micro-batch) to the parquet sink with a checkpoint, run inside a
     * JFR recording of process starts. After the stream, one stock

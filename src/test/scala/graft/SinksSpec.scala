@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.{OrderEvent, Sinks, Sources, Topologies}
 
@@ -159,6 +160,66 @@ class SinksSpec extends SparkSpec {
 
     val landed = spark.read.parquet(out)
     assert(rowsOf(landed) === Set(Seq("o1", 4000.0, "PAID"))) // once, exactly
+  }
+
+  /** SinksSpec's J3 restart sequence through the real topology: run 1 sees
+    * only orders, the payments land while the query is down, a restart
+    * joins them, then a flush a day ahead on both sources closes every
+    * interval, and a last restart with no new input emits nothing.
+    * Returns the landed rows, the flush order excluded.
+    */
+  private def flagshipRestart(
+      topology: (DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame): Seq[Seq[Any]] = {
+    import graft.streaming.PaymentEvent
+    val oIn = Files.createTempDirectory("graft-flagship-orders").toString
+    val pIn = Files.createTempDirectory("graft-flagship-payments").toString
+    val out = Files.createTempDirectory("graft-flagship-out").toString
+    val ckpt = Files.createTempDirectory("graft-flagship-ckpt").toString
+    val profiles = Seq(("alice", "gold"), ("bob", "basic"), ("carol", "gold"))
+      .toDF("user", "profile")
+    val discounts = Seq(("gold", 0.5), ("basic", 0.9)).toDF("profile", "amount")
+    val payments = Seq(
+      PaymentEvent("o1", "PAID", ts("2024-01-01T00:04:00Z")), // within +5 min of o1
+      PaymentEvent("o3", "PAID", ts("2024-01-01T01:00:00Z"))) // outside → never joins
+    val pSchema = payments.toDF().schema
+    def run(): Unit = {
+      val q = Sinks.toParquet(topology(Sources.fileStream(spark, oIn, orders.toDF().schema),
+        Sources.fileStream(spark, pIn, pSchema), profiles, discounts), out, ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def landed(): Seq[Seq[Any]] =
+      if (!Files.list(java.nio.file.Paths.get(out)).iterator().hasNext) Nil
+      else spark.read.parquet(out).filter(col("orderId") =!= "oflush")
+        .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+
+    orders.toDF().coalesce(1).write.mode("append").parquet(oIn)
+    run()
+    assert(landed() === Nil) // every order is still waiting in state
+    payments.toDF().coalesce(1).write.mode("append").parquet(pIn)
+    run()
+    // the recovered o1 joins its payment; nothing is null-padded before the flush
+    assert(landed().map(r => (r.head, r.last)) === Seq(("o1", "PAID")))
+    Seq(OrderEvent("oflush", "alice", Seq("x"), 1.0, ts("2024-01-02T00:00:00Z"))).toDF()
+      .coalesce(1).write.mode("append").parquet(oIn)
+    Seq(PaymentEvent("pflush", "PAID", ts("2024-01-02T00:00:00Z"))).toDF()
+      .coalesce(1).write.mode("append").parquet(pIn)
+    run()
+    val afterFlush = landed()
+    run()
+    assert(landed() === afterFlush) // the last restart re-emits nothing
+    afterFlush
+  }
+
+  test("flagship paidOrders J3 state survives a checkpoint restart: each pair once") {
+    assert(flagshipRestart(Topologies.paidOrders(_, _, _, _)) ===
+      Seq(Seq("o1", "alice", "gold", 2000.0, "PAID")))
+  }
+
+  test("flagship leftOuter J3 state survives a restart: unmatched orders null-padded once") {
+    assert(flagshipRestart(Topologies.paidOrdersLeftOuter(_, _, _, _)) === Seq(
+      Seq("o1", "alice", "gold", 2000.0, "PAID"),
+      Seq("o2", "bob", "basic", 720.0, null),
+      Seq("o3", "carol", "gold", 750.0, null)))
   }
 
   test("K1 batch sink writes and re-reads parquet") {
