@@ -1,15 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+/** The driver's benchmark: every selected catalog entry's steady-state
+  * seconds, as two JSON lines on stdout and `target/bench_<sf>.json`.
+  *
+  * The environment of both driver mains is read here, once ([[Verify]]
+  * uses the same session and selector); unset, a run covers the whole
+  * catalog at shuffle partitions = cpus.
+  */
 object Bench {
+  /** `SPARK_GRAFT_CPUS` (default 4): local threads. */
+  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+  /** `SPARK_GRAFT_SHUFFLE_PARTITIONS` (default cpus), a scale-rehearsal
+    * override: at sf10 a 32-partition shuffle holds ~10x the per-partition
+    * bytes the configs were sized for, and more partitions at the same
+    * thread count is the cluster-correct lever.
+    */
+  val shufflePartitions: Int =
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(cpus)
+  /** `SPARK_GRAFT_ONLY`: comma-separated entry names, for targeted work on
+    * a few entries; unset = the whole catalog.
+    */
+  val only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  /** The catalog entries [[only]] selects; a name not in the catalog is
+    * an error, not a silently empty run. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] = {
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names no catalog entry: ${unknown.mkString(",")}")
+    SparkEntry.queries.filter { case (name, _) => only.forall(_(name)) }
+  }
+
+  /** The session both driver mains run in. */
+  def session(): SparkSession = Engine.local(cpus, shufflePartitions)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale-rehearsal override only (the driver never sets it, so recorded
-    // benches use cpus): at sf10 a 32-partition shuffle holds ~10x the
-    // per-partition bytes the configs were sized for — more partitions at
-    // the same thread count is the cluster-correct lever (see DevBench).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = Engine.local(cpus.toInt, shuffleParts.toInt)
+    val picked = selected
+    val spark = session()
     // Warm the JVM/codegen/parquet paths so the first measured query is
     // not charged one-time session startup, and touch every table once,
     // through the same read path the queries take, so no measured query
@@ -28,13 +56,6 @@ object Bench {
     // its round-1 time). A 100 TB cluster job compiles codegen once and
     // then processes data for hours, so steady-state per-query time is the
     // honest scale metric; the timed second pass reports exactly that.
-    // Optional dev-time filter (regex on query name) for targeted perf
-    // work; the driver never sets it, so the recorded bench always covers
-    // the full catalog.
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val picked = SparkEntry.queries.filter { case (name, _) =>
-      filter.forall(_.findFirstIn(name).isDefined)
-    }
     // Force evaluation of EVERY output column, not just row count: count()
     // lets Catalyst prune all columns down to the scan, so a map-only
     // projection (x55's regex pipeline) was billed scan cost (~0.10 s)
@@ -43,7 +64,7 @@ object Bench {
     // the full physical plan — all columns materialized into UnsafeRows —
     // and discards the rows, which is exactly what a downstream
     // parquet-writing consumer pays minus encoding.
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
+    def force(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
     // Inter-query cleanup is Housekeeping.scopedBlocks — drop exactly the
     // blocks each query persisted, nothing else (round 5's blanket
@@ -58,31 +79,15 @@ object Bench {
     // swallow-and-record made a CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND crash
     // look like a 2.2 s pagerank. Failures are recorded by name in the
     // JSON ("errors") and counted in the summary line.
-    // SPARK_GRAFT_BENCH_DEBUG=1: per-query heap/GC telemetry on stderr —
-    // the session-degradation debugging loop (driver never sets it)
-    val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     var errors = List.empty[(String, String)]
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val gc0 = if (debug) gcMillis else 0L
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try Housekeeping.scopedBlocks(spark) { force(fn(spark, sfDir)) }
       catch { case e: Throwable =>
         errors ::= name -> String.valueOf(e.getMessage).take(200)
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (debug) {
-        val rt = Runtime.getRuntime
-        val usedMb = (rt.totalMemory - rt.freeMemory) / (1 << 20)
-        System.err.println(
-          f"[bench-debug] $name%-28s $sec%8.3f s  heap=${usedMb}%5d MB  gc+=${gcMillis - gc0}%5d ms")
-      }
-      sec
+      (System.nanoTime() - t0) / 1e9
     }
     // Two timed rounds, report the per-query MINIMUM: the steady-state
     // time a warmed executor would sustain. A single-shot measurement on
@@ -123,7 +128,7 @@ object Bench {
       // artifact: round 11's committed sf0.1 anchor turned out to be a
       // 2-query x36/x3d probe that had silently replaced the 192-query
       // recording at the same path. Partial runs get their own file.
-      val suffix = if (filter.isDefined) "_filtered" else ""
+      val suffix = if (only.isDefined) "_filtered" else ""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/bench_$sfName$suffix.json"), fullJson + "\n")
     } catch { case e: Throwable =>

@@ -1,23 +1,15 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected SparkEntry.queries result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. Session
+  * and `SPARK_GRAFT_ONLY` selector as in [[Bench]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // scale-rehearsal override only, same contract as Bench: the driver
-    // never sets it, so its runs keep shuffle.partitions = cpus
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = Engine.local(cpus.toInt, shuffleParts.toInt)
+    val picked = Bench.selected
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // Local-dev filter (comma-separated names); the driver never sets it,
-    // so its full-catalog run is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    SparkEntry.queries
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .foreach { case (name, fn) =>
+    picked.foreach { case (name, fn) =>
       // scoped inter-query cleanup (see Housekeeping): drop the blocks
       // this query persisted, never another component's
       try Housekeeping.scopedBlocks(spark) {

@@ -8,7 +8,8 @@ import java.sql.Timestamp
   * read event time from record metadata (KSA:142, KSA:182); Structured
   * Streaming reads it from a column, so each event type carries `ts`.
   * The Kafka record key is likewise an explicit column (`user` for
-  * orders-by-user, `orderId` for payments — KSA:77-84).
+  * orders-by-user, `orderId` for payments — KSA:77-84). A watermarked
+  * topology needs `ts` after the epoch (see [[Topologies]]).
   */
 final case class OrderEvent(
     orderId: String,
@@ -17,7 +18,8 @@ final case class OrderEvent(
     amount: Double,
     ts: Timestamp)
 
-/** KSA:96 — payments stream record, keyed by orderId. */
+/** KSA:96 — payments stream record, keyed by orderId; `ts` after the
+  * epoch, as for [[OrderEvent]]. */
 final case class PaymentEvent(orderId: String, status: String, ts: Timestamp)
 
 /** KSA:94 — the GlobalKTable value: profile → discount multiplier. */

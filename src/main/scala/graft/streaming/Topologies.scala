@@ -30,7 +30,10 @@ import graft.ops.Relational
   *    its interval.
   *
   * Input column contracts are the [[OrderEvent]]/[[PaymentEvent]] case
-  * classes.
+  * classes. Watermarked topologies require event times after the epoch:
+  * the global watermark starts at 0 and the engine drops `ts <= watermark`
+  * as late, so a `ts` at or before 1970-01-01T00:00:00Z is dropped in
+  * streaming while the batch application keeps it.
   */
 object Topologies {
 

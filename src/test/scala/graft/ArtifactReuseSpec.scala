@@ -107,7 +107,7 @@ class ArtifactReuseSpec extends SparkSpec {
         s"$n missing from tallies: $t")
   }
 
-  test("no hand-rolled memo map in src/main: computeIfAbsent only in Artifact and DevBench") {
+  test("no hand-rolled memo map in src/main: computeIfAbsent only in Artifact") {
     val needle = "computeIf" + "Absent"
     val files: Seq[Path] =
       scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) {
@@ -116,6 +116,6 @@ class ArtifactReuseSpec extends SparkSpec {
     val hits = files
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
       .map(_.getFileName.toString).toSet
-    assert(hits === Set("Artifact.scala", "DevBench.scala"))
+    assert(hits === Set("Artifact.scala"))
   }
 }

@@ -51,15 +51,28 @@ class EngineSpec extends SparkSpec {
     } finally graft.functions.GraftFunctions.register(spark)
   }
 
+  private def scalaFiles(root: String): Seq[Path] =
+    scala.util.Using.resource(Files.walk(Paths.get(root))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+  private def source(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
   test("Engine.scala is the only place a SparkSession builder is made") {
     val needle = "SparkSession" + ".builder()"
-    def scalaFiles(root: String): Seq[Path] =
-      scala.util.Using.resource(Files.walk(Paths.get(root))) {
-        _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      }
     val hits = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .filter(p => source(p).contains(needle))
       .map(_.getFileName.toString)
     assert(hits === Seq("Engine.scala"))
+  }
+
+  test("no src/main file registers a Spark, query-execution or streaming-query listener") {
+    // the registration calls, and the conf keys that register by class name
+    val needles = Seq("addSparkListener", "addListener(", "listenerManager",
+      "spark.extraListeners", "spark.sql.queryExecutionListeners",
+      "spark.sql.streaming.streamingQueryListeners")
+    val hits = scalaFiles("src/main/scala")
+      .filter(p => needles.exists(source(p).contains))
+      .map(_.getFileName.toString)
+    assert(hits === Nil)
   }
 }

@@ -12,8 +12,9 @@ import graft.streaming.{OrderEvent, PaymentEvent, Sinks, Sources, Topologies}
 /** The flagship's J3 (orders ⋈ payments within ±5 minutes) is one keyed
   * interval co-group. Each variant's batch result equals the plain
   * DataFrame interval join it replaces, as a multiset, on hostile rows; a
-  * payment below the watermark is dropped in streaming; and the stream
-  * plans one state store per shuffle partition, with no stream-stream join.
+  * payment below the watermark, and any row at or before the epoch, is
+  * dropped in streaming; and the stream plans one state store per shuffle
+  * partition, with no stream-stream join.
   */
 class FlagshipJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -79,9 +80,6 @@ class FlagshipJoinSpec extends SparkSpec {
       col("user"), col("profile"), col("amount"), col("status"))
   }
 
-  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
-    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
-
   private val variants: Seq[(String, (DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame)] =
     Seq("inner" -> (Topologies.paidOrders(_, _, _, _)),
       "left_outer" -> (Topologies.paidOrdersLeftOuter(_, _, _, _)),
@@ -92,8 +90,8 @@ class FlagshipJoinSpec extends SparkSpec {
       val got = topology(hostileOrders, hostilePayments, profiles, discounts)
       val want = intervalJoined(hostileOrders, hostilePayments, joinType)
       assert(got.schema.map(f => (f.name, f.dataType)) === want.schema.map(f => (f.name, f.dataType)))
-      assert(multiset(got) === multiset(want))
-      val rows = multiset(got)
+      assert(countsOf(got) === countsOf(want))
+      val rows = countsOf(got)
       // both ±5-minute boundaries match, the 1 ms beyond them does not
       assert(rows(Seq("b", "alice", "gold", 50.0, "PAID")) === 2)
       // 2 orders × 2 payments under one orderId
@@ -137,6 +135,39 @@ class FlagshipJoinSpec extends SparkSpec {
     val rows = spark.table(name).collect().map(_.toSeq).toSeq
     assert(rows.sortBy(_.head.toString) === Seq(
       Seq("o1", "alice", "gold", 50.0, null), Seq("o2", "alice", "gold", 100.0, "PAID")))
+  }
+
+  test("event times at or before the epoch are late in streaming, kept in batch") {
+    // the watermark starts at 0 and the engine drops ts <= watermark, so
+    // watermarked topologies require event times after the epoch
+    val orders = Seq(
+      OrderEvent("pre", "alice", Nil, 100.0, ts("1969-12-31T23:50:00Z")),
+      OrderEvent("epoch", "alice", Nil, 200.0, ts("1970-01-01T00:00:00Z")),
+      OrderEvent("after", "alice", Nil, 300.0, ts("1970-01-01T00:00:00.001Z")))
+    val payments = Seq(PaymentEvent("pre", "PAID", ts("1969-12-31T23:51:00Z")),
+      PaymentEvent("after", "PAID", ts("1970-01-01T00:01:00Z")))
+    assert(countsOf(Topologies.paidOrdersLeftOuter(orders.toDF(), payments.toDF(),
+      profiles, discounts)) === Map(
+      Seq("pre", "alice", "gold", 50.0, "PAID") -> 1,
+      Seq("epoch", "alice", "gold", 100.0, null) -> 1,
+      Seq("after", "alice", "gold", 150.0, "PAID") -> 1))
+
+    val (oms, odf) = Sources.memoryStream[OrderEvent](spark)
+    val (pms, pdf) = Sources.memoryStream[PaymentEvent](spark)
+    val name = "flagship_epoch"
+    val q = Sinks.toMemory(
+      Topologies.paidOrdersLeftOuter(odf, pdf, profiles, discounts), name, "append").start()
+    try {
+      oms.addData(orders); pms.addData(payments)
+      q.processAllAvailable()
+      // a flush on both sides closes every interval the late rows would have had
+      oms.addData(OrderEvent("oflush", "alice", Nil, 1.0, ts("2024-01-01T00:00:00Z")))
+      pms.addData(PaymentEvent("pflush", "PAID", ts("2024-01-01T00:00:00Z")))
+      q.processAllAvailable()
+      val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(dropped === 3L) // the two orders and the payment at or before the epoch
+    } finally q.stop()
+    assert(countsOf(spark.table(name)) === Map(Seq("after", "alice", "gold", 150.0, "PAID") -> 1))
   }
 
   test("streaming paidOrders keeps one state store per shuffle partition and no stream-stream join") {

@@ -87,12 +87,8 @@ class StreamingScaleSpec extends SparkSpec {
 
     // multiset equality: several PAID lineitems in-band for one order emit
     // identical rows, so compare (row -> multiplicity), not just the set
-    def counted(df: DataFrame): Set[Seq[Any]] =
-      rowsOf(df.groupBy(df.columns.map(col).toIndexedSeq: _*)
-        .agg(count(lit(1)).as("n")))
-    val streamedCounted = counted(streamed)
     assert(streamed.count() > 0, "streaming run emitted nothing")
-    assert(streamedCounted === counted(batch),
+    assert(countsOf(streamed) === countsOf(batch),
       "streaming fixpoint diverged from the batch application")
 
     // checkpointed restart safety net: a second start() over the same

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Round-over-round / scale-over-scale bench regression report.
 
-Diffs two per-query bench artifacts (the {"queries": {name: sec}} JSON
-written by graft.Bench to target/bench_<sf>.json) and flags movers:
+Diffs two per-query bench records (the {"queries": {name: sec}} JSON line
+that graft.Bench prints and writes to target/bench_<sf>.json; a file is read
+from its first JSON line with a "queries" map, so a whole Bench stdout log
+works too) and flags movers:
 
   tools/bench_diff.py OLD.json NEW.json [--flag-ratio 1.5]
       [--data-ratio 1.0] [--min-sec 0.2] [--allow name1,name2]
@@ -28,11 +30,15 @@ import sys
 
 def load(path):
     with open(path) as f:
-        d = json.load(f)
-    q = d.get("queries")
-    if not isinstance(q, dict) or not q:
-        sys.exit(f"{path}: no per-query map (need the Bench artifact form)")
-    return d, q
+        for line in f:
+            try:
+                d = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            q = d.get("queries") if isinstance(d, dict) else None
+            if isinstance(q, dict) and q:
+                return d, q
+    sys.exit(f"{path}: no JSON line with a per-query map (need a Bench record)")
 
 
 def main():
