@@ -3,9 +3,14 @@ package graft.streaming
 import java.sql.Timestamp
 import java.time.Duration
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.functions.{col, lit, struct}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Per-user running totals: the accumulator for [[Stateful.runningTotals]]. */
 final case class UserTotals(user: String, orders: Long, products: Long, amount: Double)
@@ -16,22 +21,17 @@ final case class UserTotals(user: String, orders: Long, products: Long, amount: 
   */
 final case class ProfileUpdate(user: String, profile: String, ts: Timestamp)
 
-/** Internal co-processing envelope for [[Stateful.streamTableJoinExact]]:
-  * order events and profile upserts unioned into one keyed stream.
+/** The side-tagged envelope of [[Stateful.coGroup]]: one input row under
+  * its join key and event time, whole as `left` or `right`; the other side
+  * is null.
   */
-final case class CoEvent(user: String, isProfile: Boolean, profile: String,
-    orderId: String, amount: Double, ts: Timestamp)
+final case class CoRow[L, R](key: String, ts: Timestamp, left: L, right: R)
 
 /** Output of the exact stream–table join: an order enriched with the
   * profile current when it was processed.
   */
 final case class EnrichedOrder(orderId: String, user: String, amount: Double,
     profile: String, ts: Timestamp)
-
-/** Upsert envelope for [[Stateful.tableTableJoinExact]]: both changelogs
-  * unioned into one keyed stream, tagged by side.
-  */
-final case class TableSide(user: String, isRight: Boolean, v: String, ts: Timestamp)
 
 /** Per-key latest value of each side — the two-table join state. */
 final case class PairState(left: String, right: String)
@@ -53,10 +53,6 @@ final case class ChildUpdate(id: String, fk: String, v: String, ts: Timestamp)
   */
 final case class FkSubscription(fk: String, id: String, v: String,
     subscribe: Boolean, ts: Timestamp)
-
-/** Stage-2 envelope: subscriptions and parent upserts, one keyed stream. */
-final case class FkEvent(fk: String, isParent: Boolean, parentV: String,
-    id: String, childV: String, subscribe: Boolean, ts: Timestamp)
 
 /** Stage-2 state per parent key: the parent's current value and the
   * subscribed children with their current values (Kafka Streams'
@@ -189,6 +185,59 @@ object Stateful {
       }
   }
 
+  /** THE keyed two-input co-group: the per-key state store Kafka Streams
+    * puts behind each two-input join (`KStream.join(KTable)` KSA:162-165,
+    * the table-table and FK table joins, `KStream.join(…, JoinWindows)`
+    * KSA:177-186). Every two-input stateful operator in this package is a
+    * `step` over it:
+    *
+    *  - Envelope: each input row becomes a [[CoRow]] under its side's key
+    *    column, whole as that side's struct next to a typed null for the
+    *    other side — column expressions, no typed map over either input.
+    *  - Grouping: the union, `groupByKey` on the key, one append-mode
+    *    `flatMapGroupsWithState`; `step` owns the state.
+    *  - Time: a watermarked stream gets the event-time timeout and `step`
+    *    gets the current watermark. Any other input (batch, or a stream
+    *    without a watermark) gets no timeout and `Long.MaxValue`: nothing
+    *    is pending, so a `step` that flushes on the watermark keeps no
+    *    state and arms no timeout. `unionDelay` puts one watermark on the
+    *    union (so one idle input cannot stall it); without it each input
+    *    keeps the watermark it arrives with.
+    *  - Per-batch order: event time, then LEFT before right, then
+    *    `tiebreak` (null sorts as ""). Without the tiebreaks equal-ts ties
+    *    keep shuffle arrival order and results vary across runs.
+    *  - NULL event time: the row has no place in that order and is dropped
+    *    before the union — the unplaceable-record contract of
+    *    [[graft.ops.Relational.asofJoin]]. With `keepUntimed` such rows
+    *    reach `step` instead, ahead of every timed row.
+    */
+  private[streaming] def coGroup[L <: Product : TypeTag, R <: Product : TypeTag,
+      S: Encoder, O: Encoder](left: Dataset[L], right: Dataset[R], leftKey: String,
+      rightKey: String, tiebreak: CoRow[L, R] => String, unionDelay: Option[String] = None,
+      keepUntimed: Boolean = false)(
+      step: (String, Long, Seq[CoRow[L, R]], GroupState[S]) => Iterator[O]): Dataset[O] = {
+    val (ls, rs) = (Encoders.product[L].schema, Encoders.product[R].schema)
+    def whole(s: StructType): Column =
+      struct(s.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    def tagged(in: Dataset[_], key: String, l: Column, r: Column) =
+      (if (keepUntimed) in.toDF() else in.filter(col("ts").isNotNull))
+        .select(col(key).as("key"), col("ts"), l.as("left"), r.as("right"))
+    val union = tagged(left, leftKey, whole(ls), lit(null).cast(rs))
+      .unionByName(tagged(right, rightKey, lit(null).cast(ls), whole(rs)))
+    val co = unionDelay.fold(union)(union.withWatermark("ts", _))
+    val watermarked =
+      co.isStreaming && co.schema("ts").metadata.contains(EventTimeWatermark.delayKey)
+    val order = (r: CoRow[L, R]) => (if (r.ts == null) Long.MinValue else r.ts.getTime,
+      if (r.left != null) 0 else 1, Option(tiebreak(r)).getOrElse(""))
+    co.as(Encoders.product[CoRow[L, R]]).groupByKey(_.key)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(),
+        if (watermarked) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
+        (key: String, rows: Iterator[CoRow[L, R]], state: GroupState[S]) =>
+          val wm = if (watermarked) state.getCurrentWatermarkMs() else Long.MaxValue
+          step(key, wm, rows.toSeq.sortBy(order), state)
+      }
+  }
+
   /** EXACT KTable–KTable join (`ktableA.outerJoin(ktableB)` — the DSL's
     * two-changelog join, unused by the reference but core table surface):
     * both inputs are upsert streams keyed by `user`; per key the state
@@ -197,9 +246,8 @@ object Stateful {
     * (null until that side exists — the full-outer view). The emitted
     * stream is the join's changelog; its last row per key is the batch
     * full-outer join of the two compacted tables (the fixpoint property
-    * StreamingSpec pins). Total order inside a batch: event time, then
-    * left-before-right, then value — without the tiebreaks, equal-ts
-    * ties keep shuffle arrival order and the result varies across runs.
+    * StreamingSpec pins). A [[coGroup]] step; equal-ts ties break on the
+    * value.
     *
     * Scale: state is two values per distinct key, partitioned across
     * executors — the same O(keys) posture as Kafka Streams' two RocksDB
@@ -209,23 +257,16 @@ object Stateful {
       right: Dataset[ProfileUpdate]): Dataset[JoinedPair] = {
     val spark = left.sparkSession
     import spark.implicits._
-    val co = left.map(p => TableSide(p.user, isRight = false, p.profile, p.ts))
-      .unionByName(right.map(p => TableSide(p.user, isRight = true, p.profile, p.ts)))
-    co.groupByKey(_.user)
-      .flatMapGroupsWithState[PairState, JoinedPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: String, events: Iterator[TableSide], state: GroupState[PairState]) =>
-          val out = Seq.newBuilder[JoinedPair]
-          var st = state.getOption.getOrElse(PairState(null, null))
-          events.toSeq.sortBy(e =>
-              (e.ts.getTime, if (e.isRight) 1 else 0,
-                Option(e.v).getOrElse(""))).foreach { e =>
-            st = if (e.isRight) st.copy(right = e.v) else st.copy(left = e.v)
-            out += JoinedPair(user, st.left, st.right, e.ts)
-          }
-          state.update(st)
-          out.result().iterator
+    coGroup[ProfileUpdate, ProfileUpdate, PairState, JoinedPair](left, right, "user", "user",
+      r => Option(r.left).getOrElse(r.right).profile) { (user, _, rows, state) =>
+      var st = state.getOption.getOrElse(PairState(null, null))
+      val out = rows.map { e =>
+        st = if (e.left != null) st.copy(left = e.left.profile) else st.copy(right = e.right.profile)
+        JoinedPair(user, st.left, st.right, e.ts)
       }
+      state.update(st)
+      out.iterator
+    }
   }
 
   /** Table RE-GROUP aggregation deltas (`ktable.groupBy(newKey)
@@ -315,12 +356,13 @@ object Stateful {
     * stop fanning out to this child), and a subscribe to the new parent
     * carrying the child's current value. This is exactly the reference
     * DSL's subscription-topic re-key; the stage boundary that is a
-    * repartition topic there is a keyed exchange here.
+    * repartition topic there is a keyed exchange here. A NULL-ts child
+    * upsert is dropped, as in [[coGroup]].
     */
   def fkSubscriptions(children: Dataset[ChildUpdate]): Dataset[FkSubscription] = {
     val spark = children.sparkSession
     import spark.implicits._
-    children.groupByKey(_.id)
+    children.filter(col("ts").isNotNull).groupByKey(_.id)
       .flatMapGroupsWithState[String, FkSubscription](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (id: String, events: Iterator[ChildUpdate], state: GroupState[String]) =>
@@ -351,56 +393,38 @@ object Stateful {
     * row, and at equal ts a non-null `parentV` beats the tombstone (the
     * new match and the move's retraction share the move's timestamp —
     * this is the version-resolution rule Kafka Streams implements with
-    * subscription versions). Total order inside a batch: event time,
-    * parent-before-subscription on ties, child id.
+    * subscription versions). A [[coGroup]] step with the parent changelog
+    * as the left side; equal-ts ties break on child id.
     */
-  def fkJoinResponses(events: Dataset[FkEvent]): Dataset[FkJoined] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.fk)
-      .flatMapGroupsWithState[FkParentState, FkJoined](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (fk: String, es: Iterator[FkEvent], state: GroupState[FkParentState]) =>
-          val out = Seq.newBuilder[FkJoined]
-          var st = state.getOption.getOrElse(FkParentState(null, Map.empty))
-          es.toSeq.sortBy(e =>
-              (e.ts.getTime, if (e.isParent) 0 else 1,
-                Option(e.id).getOrElse(""))).foreach { e =>
-            if (e.isParent) {
-              st = st.copy(parentV = e.parentV)
-              st.children.toSeq.sortBy(_._1).foreach { case (id, cv) =>
-                out += FkJoined(id, cv, fk, e.parentV, e.ts)
-              }
-            } else if (e.subscribe) {
-              st = st.copy(children = st.children + (e.id -> e.childV))
-              if (st.parentV != null)
-                out += FkJoined(e.id, e.childV, fk, st.parentV, e.ts)
-            } else {
-              // unsubscribe: detach AND retract — the tombstone row
-              // (null v, null parentV) withdraws the old pair in case the
-              // child's new fk never matches; when it does match, the
-              // match row shares the move's timestamp and wins the
-              // documented tie rule (at equal ts, non-null parentV wins)
-              st = st.copy(children = st.children - e.id)
-              if (st.parentV != null)
-                out += FkJoined(e.id, null, fk, null, e.ts)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** Union a subscription stream and a parent changelog into the stage-2
-    * envelope (the response-side input).
-    */
-  def fkCoEvents(subs: Dataset[FkSubscription],
-      parents: Dataset[ProfileUpdate]): Dataset[FkEvent] = {
+  def fkJoinResponses(subs: Dataset[FkSubscription],
+      parents: Dataset[ProfileUpdate]): Dataset[FkJoined] = {
     val spark = subs.sparkSession
     import spark.implicits._
-    subs.map(s => FkEvent(s.fk, isParent = false, null, s.id, s.v, s.subscribe, s.ts))
-      .unionByName(parents.map(p =>
-        FkEvent(p.user, isParent = true, p.profile, null, null, subscribe = false, p.ts)))
+    coGroup[ProfileUpdate, FkSubscription, FkParentState, FkJoined](parents, subs, "user", "fk",
+      r => Option(r.right).map(_.id).orNull) { (fk, _, rows, state) =>
+      val out = Seq.newBuilder[FkJoined]
+      var st = state.getOption.getOrElse(FkParentState(null, Map.empty))
+      rows.foreach {
+        case CoRow(_, ts, p, null) =>
+          st = st.copy(parentV = p.profile)
+          st.children.toSeq.sortBy(_._1).foreach { case (id, cv) =>
+            out += FkJoined(id, cv, fk, p.profile, ts)
+          }
+        case CoRow(_, ts, _, s) if s.subscribe =>
+          st = st.copy(children = st.children + (s.id -> s.v))
+          if (st.parentV != null) out += FkJoined(s.id, s.v, fk, st.parentV, ts)
+        case CoRow(_, ts, _, s) =>
+          // unsubscribe: detach AND retract — the tombstone row (null v,
+          // null parentV) withdraws the old pair in case the child's new
+          // fk never matches; when it does match, the match row shares
+          // the move's timestamp and wins the documented tie rule (at
+          // equal ts, non-null parentV wins)
+          st = st.copy(children = st.children - s.id)
+          if (st.parentV != null) out += FkJoined(s.id, null, fk, null, ts)
+      }
+      state.update(st)
+      out.result().iterator
+    }
   }
 
   /** The composed EXACT FK join. Chained `flatMapGroupsWithState` stages
@@ -414,19 +438,21 @@ object Stateful {
     */
   def fkTableJoinExact(children: Dataset[ChildUpdate],
       parents: Dataset[ProfileUpdate]): Dataset[FkJoined] =
-    fkJoinResponses(fkCoEvents(fkSubscriptions(children), parents))
+    fkJoinResponses(fkSubscriptions(children), parents)
 
   /** EXACT changelog-table join (J1's hard case — SURVEY §7 "what's hard"
     * #1): the profile table is itself a STREAM of upserts, not a static
     * snapshot. Kafka Streams backs `stream.join(ktable)` with a per-key
-    * state store holding the table's latest value; this reproduces that
-    * with `flatMapGroupsWithState` over the UNION of both inputs keyed by
-    * user: profile records upsert the state, order records read it and
+    * state store holding the table's latest value; this is that store as a
+    * [[coGroup]] step keyed by user, the profile changelog as the left
+    * side: profile records upsert the state, order records read it and
     * emit enriched (inner-join: orders with no profile yet are dropped,
-    * exactly the KTable-miss behavior). Within a micro-batch, events are
-    * applied in event-time order, so an upsert and a later order in the
-    * same batch see each other — the deterministic refinement of Kafka
-    * Streams' processing-order semantics.
+    * exactly the KTable-miss behavior). Within a micro-batch an upsert and
+    * a later order see each other, and at equal event time the upsert
+    * wins — the deterministic refinement of Kafka Streams'
+    * processing-order semantics; equal-ts orders break on orderId. A NULL
+    * user matches nothing, as Kafka Streams ignores null-key records in
+    * joins (and as J1's DataFrame join drops them).
     *
     * Scale: state is one (user → profile) entry per key, hash-partitioned
     * across executors — identical footprint to the reference's RocksDB
@@ -437,30 +463,20 @@ object Stateful {
       profiles: Dataset[ProfileUpdate]): Dataset[EnrichedOrder] = {
     val spark = orders.sparkSession
     import spark.implicits._
-    val co = orders
-      .map(o => CoEvent(o.user, isProfile = false, null, o.orderId, o.amount, o.ts))
-      .unionByName(
-        profiles.map(p => CoEvent(p.user, isProfile = true, p.profile, null, 0.0, p.ts)))
-    co.groupByKey(_.user)
-      .flatMapGroupsWithState[String, EnrichedOrder](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: String, events: Iterator[CoEvent], state: GroupState[String]) =>
-          val out = Seq.newBuilder[EnrichedOrder]
-          var profile = state.getOption.orNull
-          // total order: event time, then PROFILE-BEFORE-ORDER on equal
-          // timestamps (the table-update-wins refinement), then orderId —
-          // without the tiebreaks, equal-ts ties keep shuffle arrival
-          // order and the join result varies across runs/retries
-          events.toSeq.sortBy(e =>
-              (e.ts.getTime, if (e.isProfile) 0 else 1,
-                Option(e.orderId).getOrElse(""))).foreach { e =>
-            if (e.isProfile) profile = e.profile
-            else if (profile != null)
-              out += EnrichedOrder(e.orderId, user, e.amount, profile, e.ts)
-          }
-          if (profile != null) state.update(profile)
-          out.result().iterator
+    coGroup[ProfileUpdate, OrderEvent, String, EnrichedOrder](profiles, orders, "user", "user",
+      r => Option(r.right).map(_.orderId).orNull) { (user, _, rows, state) =>
+      if (user == null) Iterator.empty
+      else {
+        var profile = state.getOption.orNull
+        val out = rows.flatMap {
+          case CoRow(_, _, p, null) => profile = p.profile; None
+          case CoRow(_, ts, _, o) =>
+            Option(profile).map(EnrichedOrder(o.orderId, user, o.amount, _, ts))
+        }
+        if (profile != null) state.update(profile)
+        out.iterator
       }
+    }
   }
 
   /** Streaming analog of [[graft.ops.Sequences.transitionCounts]]'s
@@ -841,10 +857,6 @@ object Stateful {
     */
   final case class Trade(tradeId: String, sym: String, qty: Double, ts: Timestamp)
 
-  /** Internal union envelope for [[asofJoinExact]]. */
-  final case class AsofTick(sym: String, isLeft: Boolean, tradeId: String,
-      qty: Double, quoteId: String, price: Double, ts: Timestamp)
-
   /** Buffered right row: a quote awaiting (or serving) matches. */
   final case class AsofQuoteRec(tsMs: Long, tb: String, price: Double)
 
@@ -863,6 +875,45 @@ object Stateful {
     */
   final case class AsofJoinedTrade(tradeId: String, sym: String, qty: Double,
       ts: Timestamp, price: Option[Double], quoteId: Option[String])
+
+  /** One as-of invocation as a pure state transition — the unit under the
+    * prune-bound and knife-edge tests: `(watermark, state, admitted rows)
+    * → (new state, emitted matches)`. Invariants it maintains (asserted
+    * by StreamingSpec directly on the returned state):
+    *
+    *   - emitted trades all have `tsMs < wm` (STRICT — the late-row
+    *     filter admits `ts >= wm`, so a quote tying a trade's event time
+    *     can still legally arrive; the trade must wait until the
+    *     watermark strictly passes it);
+    *   - retained quote history holds AT MOST ONE quote strictly below
+    *     the watermark (the reigning as-of candidate; older quotes are
+    *     dominated forever) — the state bound that keeps per-key memory
+    *     O(delay window), not O(stream length);
+    *   - retained trades are exactly the not-yet-ripe ones.
+    */
+  def asofStep(sym: String, wm: Long, prev: AsofBuf,
+      incoming: Seq[CoRow[Trade, Quote]]): (AsofBuf, Seq[AsofJoinedTrade]) = {
+    // keep both sides sorted: quotes by (ts, tb) so "last at-or-before"
+    // is a scan from the right, trades by (ts, id) for determinism
+    val quotesAll = (prev.quotes ++ incoming.collect {
+      case CoRow(_, ts, null, q) => AsofQuoteRec(ts.getTime, q.quoteId, q.price)
+    }).sortBy(q => (q.tsMs, q.tb))
+    val tradesAll = (prev.trades ++ incoming.collect {
+      case CoRow(_, ts, t, null) => AsofTradeRec(ts.getTime, t.tradeId, t.qty)
+    }).sortBy(t => (t.tsMs, t.tradeId))
+    val (ripe, pending) = tradesAll.partition(_.tsMs < wm)
+    val out = ripe.map { t =>
+      val m = quotesAll.takeWhile(_.tsMs <= t.tsMs).lastOption
+      AsofJoinedTrade(t.tradeId, sym, t.qty, new Timestamp(t.tsMs),
+        m.map(_.price), m.map(_.tb))
+    }
+    // prune: the latest quote strictly below the watermark still serves
+    // future trades; everything older is dominated forever. Quotes AT
+    // the watermark stay un-collapsed — a same-ts arrival with a greater
+    // quoteId is still admissible and could win a tie.
+    val (below, above) = quotesAll.partition(_.tsMs < wm)
+    (AsofBuf(below.takeRight(1) ++ above, pending), out)
+  }
 
   /** Streaming AS-OF join — the out-of-order-correct twin of
     * [[graft.ops.Relational.asofJoin]] (catalog entry `o15_asof_join`).
@@ -884,87 +935,41 @@ object Stateful {
     * watermark on arrival are dropped (standard late-data policy — the
     * one semantic this engine adds over the batch operator, which sees
     * no late data). Emission waits on watermark ADVANCEMENT, so a
-    * quiet key flushes via an event-time timer (`EventTimeTimeout`),
-    * not only on its next event.
+    * quiet key flushes via an event-time timer, not only on its next
+    * event. A [[coGroup]] step with ONE watermark on the union of both
+    * sides; its batch application is the batch operator.
     *
     * Scale shape: state per key is the pending-trade buffer (bounded by
     * the watermark delay × per-key trade rate) plus the quote history
     * ABOVE the watermark and one quote below it (older quotes can never
     * win an as-of match again and are pruned every invocation) — the
     * same O(delay-window) footprint a stream–stream interval join
-    * carries, hash-partitioned by sym. Streaming-only (batch execution
-    * has no watermark; use the batch operator there).
+    * carries, hash-partitioned by sym.
     */
-  /** One as-of invocation as a pure state transition — the unit under the
-    * prune-bound and knife-edge tests: `(watermark, state, admitted rows)
-    * → (new state, emitted matches)`. Invariants it maintains (asserted
-    * by StreamingSpec directly on the returned state):
-    *
-    *   - emitted trades all have `tsMs < wm` (STRICT — the late-row
-    *     filter admits `ts >= wm`, so a quote tying a trade's event time
-    *     can still legally arrive; the trade must wait until the
-    *     watermark strictly passes it);
-    *   - retained quote history holds AT MOST ONE quote strictly below
-    *     the watermark (the reigning as-of candidate; older quotes are
-    *     dominated forever) — the state bound that keeps per-key memory
-    *     O(delay window), not O(stream length);
-    *   - retained trades are exactly the not-yet-ripe ones.
-    */
-  def asofStep(sym: String, wm: Long, prev: AsofBuf,
-      incoming: Seq[AsofTick]): (AsofBuf, Seq[AsofJoinedTrade]) = {
-    // keep both sides sorted: quotes by (ts, tb) so "last at-or-before"
-    // is a scan from the right, trades by (ts, id) for determinism
-    val quotesAll = (prev.quotes ++ incoming.collect {
-      case e if !e.isLeft => AsofQuoteRec(e.ts.getTime, e.quoteId, e.price)
-    }).sortBy(q => (q.tsMs, q.tb))
-    val tradesAll = (prev.trades ++ incoming.collect {
-      case e if e.isLeft => AsofTradeRec(e.ts.getTime, e.tradeId, e.qty)
-    }).sortBy(t => (t.tsMs, t.tradeId))
-    val (ripe, pending) = tradesAll.partition(_.tsMs < wm)
-    val out = ripe.map { t =>
-      val m = quotesAll.takeWhile(_.tsMs <= t.tsMs).lastOption
-      AsofJoinedTrade(t.tradeId, sym, t.qty, new Timestamp(t.tsMs),
-        m.map(_.price), m.map(_.tb))
-    }
-    // prune: the latest quote strictly below the watermark still serves
-    // future trades; everything older is dominated forever. Quotes AT
-    // the watermark stay un-collapsed — a same-ts arrival with a greater
-    // quoteId is still admissible and could win a tie.
-    val (below, above) = quotesAll.partition(_.tsMs < wm)
-    (AsofBuf(below.takeRight(1) ++ above, pending), out)
-  }
-
   def asofJoinExact(trades: Dataset[Trade], quotes: Dataset[Quote],
       delay: Duration): Dataset[AsofJoinedTrade] = {
     val spark = trades.sparkSession
     import spark.implicits._
-    val co = trades
-      .map(t => AsofTick(t.sym, isLeft = true, t.tradeId, t.qty, null, 0.0, t.ts))
-      .unionByName(
-        quotes.map(q => AsofTick(q.sym, isLeft = false, null, 0.0, q.quoteId, q.price, q.ts)))
-      .withWatermark("ts", s"${delay.toMillis} milliseconds")
-    co.groupByKey(_.sym)
-      .flatMapGroupsWithState[AsofBuf, AsofJoinedTrade](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (sym: String, events: Iterator[AsofTick], state: GroupState[AsofBuf]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val prev = state.getOption.getOrElse(AsofBuf(Nil, Nil))
-          // ingest, dropping sub-watermark stragglers (late-data policy).
-          // Spark's flatMapGroupsWithState additionally pre-filters input
-          // older than the PREVIOUS batch's watermark before the function
-          // runs, so this filter only tightens the boundary to the current
-          // one — the strict ripeness in asofStep makes exactness hold
-          // from this filter alone, without leaning on the engine's
-          // one-batch-lag internal boundary
-          val (next, out) = asofStep(sym, wm, prev,
-            events.filter(_.ts.getTime >= wm).toSeq)
-          state.update(next)
-          // a quiet key must still flush when the watermark passes its
-          // pending trades — arm an event-time timer on the earliest one
-          // (must exceed the current watermark; post-flush pending >= wm)
-          if (next.trades.nonEmpty)
-            state.setTimeoutTimestamp(math.max(next.trades.head.tsMs, wm + 1))
-          out.iterator
-      }
+    coGroup[Trade, Quote, AsofBuf, AsofJoinedTrade](trades, quotes, "sym", "sym",
+      r => Option(r.left).map(_.tradeId).getOrElse(r.right.quoteId),
+      unionDelay = Some(s"${delay.toMillis} milliseconds")) { (sym, wm, rows, state) =>
+      // ingest, dropping sub-watermark stragglers (late-data policy; with
+      // no watermark nothing is late). Spark's flatMapGroupsWithState
+      // additionally pre-filters input older than the PREVIOUS batch's
+      // watermark before the function runs, so this filter only tightens
+      // the boundary to the current one — the strict ripeness in asofStep
+      // makes exactness hold from this filter alone, without leaning on
+      // the engine's one-batch-lag internal boundary
+      val admitted = if (wm == Long.MaxValue) rows else rows.filter(_.ts.getTime >= wm)
+      val (next, out) =
+        asofStep(sym, wm, state.getOption.getOrElse(AsofBuf(Nil, Nil)), admitted)
+      state.update(next)
+      // a quiet key must still flush when the watermark passes its
+      // pending trades — arm an event-time timer on the earliest one
+      // (must exceed the current watermark; post-flush pending >= wm)
+      if (next.trades.nonEmpty)
+        state.setTimeoutTimestamp(math.max(next.trades.head.tsMs, wm + 1))
+      out.iterator
+    }
   }
 }

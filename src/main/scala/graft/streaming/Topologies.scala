@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import java.util.concurrent.TimeUnit
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.Relational
 
@@ -228,9 +226,10 @@ object Topologies {
   }
 
   /** J3: `key = payment.orderId AND payment.ts BETWEEN ts ± joinWindow`,
-    * as one `flatMapGroupsWithState` over the union of both sides keyed by
-    * orderId (the [[Stateful.streamTableJoinExact]] pattern). `joinType`
-    * is `inner`, `left_outer` or `full_outer`.
+    * as one [[Stateful.coGroup]] step keyed by orderId. `joinType` is
+    * `inner`, `left_outer` or `full_outer`. Each side enters as the
+    * null-padded output row it would emit unmatched: an order with a null
+    * `status`, a payment with null order fields.
     *
     * Per key the state buffers both sides. New orders probe the old and
     * the new payments, new payments only the old orders, so each pair is
@@ -251,63 +250,51 @@ object Topologies {
     val spark = enriched.sparkSession
     import spark.implicits._
     val (keepOrders, keepPayments) = (joinType != "inner", joinType == "full_outer")
-    val streaming = enriched.isStreaming
     val w = IntervalUtils.getDuration(
       IntervalUtils.stringToInterval(UTF8String.fromString(joinWindow)), TimeUnit.MILLISECONDS)
     val nul = lit(null).cast("string")
-    val events = enriched.select(col("key"), lit(false).as("isPayment"), col("ts"),
-        col("user"), col("profile"), col("amount").cast("double").as("amount"), nul.as("status"))
-      .unionByName(payments.withWatermark("ts", joinWindow).select(col("orderId").as("key"),
-        lit(true).as("isPayment"), col("ts"), nul.as("user"), nul.as("profile"),
-        lit(null).cast("double").as("amount"), col("status")))
-    val timeout = if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.as[J3Event].groupByKey(_.key)
-      .flatMapGroupsWithState[J3Buf, PaidOrder](OutputMode.Append(), timeout) {
-        (key: String, in: Iterator[J3Event], state: GroupState[J3Buf]) =>
-          val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          val prev = state.getOption.getOrElse(J3Buf(Nil, Nil))
-          val (timed, untimed) = in.toSeq.partition(_.ts != null)
-          val out = Seq.newBuilder[PaidOrder]
-          def order(o: J3Order, status: String) = PaidOrder(key, o.user, o.profile, o.amount, status)
-          def payment(status: String) = PaidOrder(key, null, null, None, status)
-          untimed.foreach { e =>
-            if (!e.isPayment && keepOrders) out += PaidOrder(key, e.user, e.profile, e.amount, null)
-            if (e.isPayment && keepPayments) out += payment(e.status)
+    Stateful.coGroup[PaidOrder, PaidOrder, J3Buf, PaidOrder](
+      enriched.select(col("key").as("orderId"), col("user"), col("profile"), col("amount"),
+        nul.as("status"), col("ts")).as[PaidOrder],
+      payments.withWatermark("ts", joinWindow).select(col("orderId"), nul.as("user"),
+        nul.as("profile"), lit(null).cast("double").as("amount"), col("status"), col("ts"))
+        .as[PaidOrder],
+      "orderId", "orderId", _ => null, keepUntimed = true) {
+      (key, wm, rows, state) =>
+        val prev = state.getOption.getOrElse(J3Buf(Nil, Nil))
+        val (timed, untimed) = rows.partition(_.ts != null)
+        val out = Seq.newBuilder[PaidOrder]
+        untimed.foreach { e =>
+          if (e.left != null && keepOrders) out += e.left
+          if (e.right != null && keepPayments) out += e.right
+        }
+        val ords = (prev.orders ++ timed.collect { case CoRow(_, ts, o, null) =>
+          J3Order(ts.getTime, o.user, o.profile, o.amount, matched = false) }).toArray
+        val pays = (prev.payments ++ timed.collect { case CoRow(_, ts, null, p) =>
+          J3Payment(ts.getTime, p.status, matched = false) }).toArray
+        def order(o: J3Order, status: String) = PaidOrder(key, o.user, o.profile, o.amount, status)
+        def probe(i: Int, j: Int): Unit =
+          if (key != null && math.abs(ords(i).tsMs - pays(j).tsMs) <= w) {
+            out += order(ords(i), pays(j).status)
+            ords(i) = ords(i).copy(matched = true)
+            pays(j) = pays(j).copy(matched = true)
           }
-          val (newPays, newOrds) = timed.partition(_.isPayment)
-          val ords = (prev.orders ++ newOrds.map(e =>
-            J3Order(e.ts.getTime, e.user, e.profile, e.amount, matched = false))).toArray
-          val pays = (prev.payments ++ newPays.map(e =>
-            J3Payment(e.ts.getTime, e.status, matched = false))).toArray
-          def probe(i: Int, j: Int): Unit =
-            if (key != null && math.abs(ords(i).tsMs - pays(j).tsMs) <= w) {
-              out += order(ords(i), pays(j).status)
-              ords(i) = ords(i).copy(matched = true)
-              pays(j) = pays(j).copy(matched = true)
-            }
-          for (i <- prev.orders.size until ords.length; j <- pays.indices) probe(i, j)
-          for (j <- prev.payments.size until pays.length; i <- prev.orders.indices) probe(i, j)
-          val (liveOrds, goneOrds) = ords.toSeq.partition(_.tsMs + w >= wm)
-          val (livePays, gonePays) = pays.toSeq.partition(_.tsMs + w >= wm)
-          if (keepOrders) goneOrds.filterNot(_.matched).foreach(o => out += order(o, null))
-          if (keepPayments) gonePays.filterNot(_.matched).foreach(p => out += payment(p.status))
-          if (liveOrds.isEmpty && livePays.isEmpty) state.remove()
-          else {
-            state.update(J3Buf(liveOrds, livePays))
-            if (streaming)
-              state.setTimeoutTimestamp((liveOrds.map(_.tsMs) ++ livePays.map(_.tsMs)).min + w)
-          }
-          out.result().iterator
-      }
-      .toDF()
+        for (i <- prev.orders.size until ords.length; j <- pays.indices) probe(i, j)
+        for (j <- prev.payments.size until pays.length; i <- prev.orders.indices) probe(i, j)
+        val (liveOrds, goneOrds) = ords.toSeq.partition(_.tsMs + w >= wm)
+        val (livePays, gonePays) = pays.toSeq.partition(_.tsMs + w >= wm)
+        if (keepOrders) goneOrds.filterNot(_.matched).foreach(o => out += order(o, null))
+        if (keepPayments)
+          gonePays.filterNot(_.matched).foreach(p => out += PaidOrder(key, null, null, None, p.status))
+        if (liveOrds.isEmpty && livePays.isEmpty) state.remove()
+        else {
+          state.update(J3Buf(liveOrds, livePays))
+          state.setTimeoutTimestamp((liveOrds.map(_.tsMs) ++ livePays.map(_.tsMs)).min + w)
+        }
+        out.result().iterator
+    }.toDF()
   }
 }
-
-/** J3's co-group envelope: an enriched order (`isPayment = false`) or a
-  * payment, keyed by orderId.
-  */
-private[streaming] final case class J3Event(key: String, isPayment: Boolean, ts: Timestamp,
-    user: String, profile: String, amount: Option[Double], status: String)
 
 /** A buffered J3 order; `matched` once it has joined a payment. */
 private[streaming] final case class J3Order(tsMs: Long, user: String, profile: String,
@@ -319,6 +306,6 @@ private[streaming] final case class J3Payment(tsMs: Long, status: String, matche
 /** J3's per-orderId state: the orders and payments not yet pruned. */
 private[streaming] final case class J3Buf(orders: Seq[J3Order], payments: Seq[J3Payment])
 
-/** One flagship output row. */
+/** One flagship output row, and J3's co-group side for either input. */
 private[streaming] final case class PaidOrder(orderId: String, user: String, profile: String,
     amount: Option[Double], status: String)

@@ -75,4 +75,18 @@ class EngineSpec extends SparkSpec {
       .map(_.getFileName.toString)
     assert(hits === Nil)
   }
+
+  test("streaming/ unions two inputs only in the co-group helper; the per-join envelopes stay gone") {
+    // the helper's body: from its signature to its closing brace at member indent
+    val helper = """(?s)\n  private\[streaming\] def coGroup\[.*?\n  \}\n""".r
+    val streaming = scalaFiles("src/main/scala/graft/streaming").map(source)
+    val bodies = streaming.flatMap(helper.findAllIn(_))
+    assert(bodies.size === 1 && bodies.head.contains("unionByName"))
+    assert(!streaming.exists(helper.replaceAllIn(_, "").contains("unionByName")))
+    val gone = Seq("CoEvent", "TableSide", "FkEvent", "AsofTick", "J3Event", "fkCoEvents")
+    val hits = scalaFiles("src/main/scala")
+      .filter(p => gone.exists(source(p).contains))
+      .map(_.getFileName.toString)
+    assert(hits === Nil)
+  }
 }

@@ -188,4 +188,34 @@ class FlagshipJoinSpec extends SparkSpec {
       assert(plan.contains("FlatMapGroupsWithState"), plan)
     } finally q.stop()
   }
+
+  test("an idle payments input stalls J3's watermark: state grows, nothing expires, a late payment joins") {
+    // under the default `min` watermark policy the payments' watermark
+    // holds the global one while only orders arrive
+    val (oms, odf) = Sources.memoryStream[OrderEvent](spark)
+    val (pms, pdf) = Sources.memoryStream[PaymentEvent](spark)
+    val name = "flagship_idle_payments"
+    val q = Sinks.toMemory(
+      Topologies.paidOrdersLeftOuter(odf, pdf, profiles, discounts), name, "append").start()
+    try {
+      oms.addData(OrderEvent("o0", "alice", Nil, 100.0, at(0)))
+      pms.addData(PaymentEvent("o0", "PAID", at(1)))
+      q.processAllAvailable()
+      // then one order per batch, an event-hour apart, and no payments
+      val stateRows = (1 to 10).map { i =>
+        oms.addData(OrderEvent(s"o$i", "alice", Nil, 100.0, at(60 * i)))
+        q.processAllAvailable()
+        // the payments' max time (+1 min) minus the 5-minute window
+        assert(q.lastProgress.eventTime.get("watermark") === "2023-12-31T23:56:00.000Z", s"batch $i")
+        q.lastProgress.stateOperators.head.numRowsTotal
+      }
+      assert(stateRows === (2L to 11L)) // one row per orderId, none pruned
+      assert(countsOf(spark.table(name)) === Map(Seq("o0", "alice", "gold", 50.0, "PAID") -> 1))
+      pms.addData(PaymentEvent("o1", "PAID", at(61)))
+      q.processAllAvailable()
+    } finally q.stop()
+    // no order was null-padded, and the late o1 payment still joined
+    assert(countsOf(spark.table(name)) === Map(Seq("o0", "alice", "gold", 50.0, "PAID") -> 1,
+      Seq("o1", "alice", "gold", 50.0, "PAID") -> 1))
+  }
 }

@@ -3,11 +3,11 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.ops.Serde
-import graft.streaming.{OrderEvent, PaymentEvent, Sinks, Sources, Topologies}
+import graft.streaming.{OrderEvent, PaymentEvent, Sinks, Sources, Stateful, Topologies}
 
 /** Structured Streaming semantics tests (SURVEY §5.2.3): MemoryStream
   * sources, processAllAvailable, memory sink; assert FINAL results — the
@@ -775,7 +775,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("FK join streaming hops: subscription deltas on fk moves; parent fan-out skips unsubscribed") {
-    import graft.streaming.{ChildUpdate, FkEvent, FkSubscription, Stateful}
+    import graft.streaming.{ChildUpdate, FkSubscription, ProfileUpdate, Stateful}
     // stage 1: child upserts → subscription deltas, across micro-batches
     val (cms, cdf) = Sources.memoryStream[ChildUpdate](spark)
     val n1 = freshTable()
@@ -792,26 +792,25 @@ class StreamingSpec extends SparkSpec {
 
     // stage 2: the response side across batches — late parent, fan-out,
     // unsubscribe retraction
-    val (ems, edf) = Sources.memoryStream[FkEvent](spark)
+    val (sms, sdf) = Sources.memoryStream[FkSubscription](spark)
+    val (pms, pdf) = Sources.memoryStream[ProfileUpdate](spark)
     val n2 = freshTable()
-    val q2 = Stateful.fkJoinResponses(edf.as[FkEvent])
+    val q2 = Stateful.fkJoinResponses(sdf.as[FkSubscription], pdf.as[ProfileUpdate])
       .toDF().writeStream.format("memory").queryName(n2).outputMode("append").start()
     def sub(id: String, v: String, t: String) =
-      FkEvent("p1", isParent = false, null, id, v, subscribe = true, ts(t))
-    def unsub(id: String, t: String) =
-      FkEvent("p1", isParent = false, null, id, null, subscribe = false, ts(t))
-    def parent(v: String, t: String) =
-      FkEvent("p1", isParent = true, v, null, null, subscribe = false, ts(t))
-    ems.addData(Seq(sub("c1", "v1", "2024-01-01T00:00:00Z"),
+      FkSubscription("p1", id, v, subscribe = true, ts(t))
+    def unsub(id: String, t: String) = FkSubscription("p1", id, null, subscribe = false, ts(t))
+    def parent(v: String, t: String) = ProfileUpdate("p1", v, ts(t))
+    sms.addData(Seq(sub("c1", "v1", "2024-01-01T00:00:00Z"),
       sub("c2", "v2", "2024-01-01T00:00:00Z")))
     q2.processAllAvailable()
     assert(spark.table(n2).count() === 0) // no parent yet: inner semantics
-    ems.addData(Seq(parent("P1", "2024-01-01T00:00:01Z")))
+    pms.addData(Seq(parent("P1", "2024-01-01T00:00:01Z")))
     q2.processAllAvailable()
     assert(rowsOf(spark.table(n2).select(col("id"), col("parentV"))) ===
       Set(Seq("c1", "P1"), Seq("c2", "P1"))) // fan-out to both subscribers
-    ems.addData(Seq(unsub("c1", "2024-01-01T00:00:02Z"),
-      parent("P1b", "2024-01-01T00:00:03Z")))
+    sms.addData(Seq(unsub("c1", "2024-01-01T00:00:02Z")))
+    pms.addData(Seq(parent("P1b", "2024-01-01T00:00:03Z")))
     q2.processAllAvailable()
     q2.stop()
     val batch3 = spark.table(n2).collect()
@@ -1082,27 +1081,36 @@ class StreamingSpec extends SparkSpec {
     assert(out.count() === 2) // doc 2 fails the word-count rule in-stream
   }
 
+  // The as-of rows. A: quotes at 0s (q1=10), 30s tie (q2=12, q3=13 — greatest id wins);
+  // trades at 10s (→q1), 30s (→q3: inclusive tie), and 20s (→q1)
+  // ARRIVING AFTER the 30s trade — the out-of-order case the J1 twin
+  // can't represent. B: a trade with no quote yet (→ null match), then
+  // a quote and a later trade (→ that quote).
+  private val quotesA = Seq(
+    Stateful.Quote("A", "q1", 10.0, ts("2024-01-01T00:00:00Z")),
+    Stateful.Quote("A", "q2", 12.0, ts("2024-01-01T00:00:30Z")),
+    Stateful.Quote("A", "q3", 13.0, ts("2024-01-01T00:00:30Z")))
+  private val qB = Stateful.Quote("B", "q4", 20.0, ts("2024-01-01T00:01:00Z"))
+  private val qFlush = Stateful.Quote("A", "qf", 99.0, ts("2024-01-01T00:10:00Z"))
+  private val trades = Seq(
+    Stateful.Trade("t1", "A", 1.0, ts("2024-01-01T00:00:10Z")),
+    Stateful.Trade("t2", "A", 2.0, ts("2024-01-01T00:00:30Z")),
+    Stateful.Trade("t3", "A", 3.0, ts("2024-01-01T00:00:20Z")),
+    Stateful.Trade("t4", "B", 4.0, ts("2024-01-01T00:00:15Z")),
+    Stateful.Trade("t5", "B", 5.0, ts("2024-01-01T00:01:30Z")))
+
+  private def asofColumns(df: DataFrame): DataFrame = df.select(col("tradeId"), col("sym"),
+    col("qty"), col("ts").cast("long").as("s"), col("price"), col("quoteId"))
+
+  /** The as-of rows' batch fixpoint: [[graft.ops.Relational.asofJoin]]. */
+  private def asofFixpoint(): DataFrame = asofColumns(graft.ops.Relational.asofJoin(
+    (quotesA :+ qB :+ qFlush).toDF()
+      .select(col("sym"), col("quoteId"), col("price"), col("ts").as("qts")),
+    Seq("sym"), "ts", "qts", Seq("price", "quoteId"), "quoteId")(trades.toDF()))
+
   test("streaming as-of join: out-of-order arrivals reach the batch asofJoin fixpoint") {
     import graft.streaming.Stateful
     import graft.streaming.Stateful.{Quote, Trade}
-    // A: quotes at 0s (q1=10), 30s tie (q2=12, q3=13 — greatest id wins);
-    // trades at 10s (→q1), 30s (→q3: inclusive tie), and 20s (→q1)
-    // ARRIVING AFTER the 30s trade — the out-of-order case the J1 twin
-    // can't represent. B: a trade with no quote yet (→ null match), then
-    // a quote and a later trade (→ that quote).
-    val quotesA = Seq(
-      Quote("A", "q1", 10.0, ts("2024-01-01T00:00:00Z")),
-      Quote("A", "q2", 12.0, ts("2024-01-01T00:00:30Z")),
-      Quote("A", "q3", 13.0, ts("2024-01-01T00:00:30Z")))
-    val qB = Quote("B", "q4", 20.0, ts("2024-01-01T00:01:00Z"))
-    val qFlush = Quote("A", "qf", 99.0, ts("2024-01-01T00:10:00Z"))
-    val trades = Seq(
-      Trade("t1", "A", 1.0, ts("2024-01-01T00:00:10Z")),
-      Trade("t2", "A", 2.0, ts("2024-01-01T00:00:30Z")),
-      Trade("t3", "A", 3.0, ts("2024-01-01T00:00:20Z")),
-      Trade("t4", "B", 4.0, ts("2024-01-01T00:00:15Z")),
-      Trade("t5", "B", 5.0, ts("2024-01-01T00:01:30Z")))
-
     val (tms, tdf) = Sources.memoryStream[Trade](spark)
     val (qms, qdf) = Sources.memoryStream[Quote](spark)
     val name = freshTable()
@@ -1121,18 +1129,9 @@ class StreamingSpec extends SparkSpec {
     qms.addData(Seq(qFlush))
     q.processAllAvailable()
     q.stop()
-    val streamed = spark.table(name)
-      .select(col("tradeId"), col("sym"), col("qty"),
-        col("ts").cast("long").as("s"), col("price"), col("quoteId"))
+    val streamed = asofColumns(spark.table(name))
 
-    val batch = graft.ops.Relational.asofJoin(
-        (quotesA :+ qB :+ qFlush).toDF()
-          .select(col("sym"), col("quoteId"), col("price"), col("ts").as("qts")),
-        Seq("sym"), "ts", "qts", Seq("price", "quoteId"), "quoteId")(
-        trades.toDF())
-      .select(col("tradeId"), col("sym"), col("qty"),
-        col("ts").cast("long").as("s"), col("price"), col("quoteId"))
-    assert(rowsOf(streamed) === rowsOf(batch))
+    assert(rowsOf(streamed) === rowsOf(asofFixpoint()))
     // spot semantics: inclusive tie → q3; out-of-order t3 → q1; no-quote → null
     val byId = streamed.collect().map(r => r.getString(0) -> r.toSeq).toMap
     assert(byId("t2")(5) === "q3" && byId("t2")(4) === 13.0)
@@ -1184,8 +1183,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("asofStep knife-edge: a quote tying the watermark and a trade's event time still wins") {
-    import graft.streaming.Stateful
-    import graft.streaming.Stateful.{AsofBuf, AsofTick}
+    import graft.streaming.{CoRow, Stateful}
+    import graft.streaming.Stateful.{AsofBuf, Quote, Trade}
     // The admission contract admits rows with ts >= wm, so a quote with ts
     // EXACTLY equal to the watermark — and equal to a buffered trade's
     // event time — may arrive in a step AFTER the watermark reached that
@@ -1193,10 +1192,10 @@ class StreamingSpec extends SparkSpec {
     // trade waiting so the tying quote can still win; ripeness at <= would
     // have emitted it a step early with the stale match.
     val T = 100000L
-    def quote(id: String, ts: Long, p: Double) =
-      AsofTick("S", isLeft = false, null, 0.0, id, p, new Timestamp(ts))
-    def trade(id: String, ts: Long) =
-      AsofTick("S", isLeft = true, id, 1.0, null, 0.0, new Timestamp(ts))
+    def quote(id: String, ts: Long, p: Double) = CoRow[Trade, Quote]("S", new Timestamp(ts),
+      null, Quote("S", id, p, new Timestamp(ts)))
+    def trade(id: String, ts: Long) = CoRow[Trade, Quote]("S", new Timestamp(ts),
+      Trade(id, "S", 1.0, new Timestamp(ts)), null)
     // step 1 (wm well below T): early quote + the trade buffer up
     val (s1, o1) = Stateful.asofStep("S", 0L, AsofBuf(Nil, Nil),
       Seq(quote("q0", 0L, 10.0), trade("t1", T)))
@@ -1217,8 +1216,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("as-of join state is watermark-bounded: quote history prunes, trades drain") {
-    import graft.streaming.Stateful
-    import graft.streaming.Stateful.{AsofBuf, AsofTick}
+    import graft.streaming.{CoRow, Stateful}
+    import graft.streaming.Stateful.{AsofBuf, Quote, Trade}
     // The state-bound twin of the runningTotalsTtl test: run the pure
     // per-invocation transition over a long stream (100 batches x 20
     // quotes + 5 trades per key) with the watermark trailing 2 batches
@@ -1226,9 +1225,11 @@ class StreamingSpec extends SparkSpec {
     // O(delay window): at most one quote strictly below the watermark
     // plus the in-window ones, and only not-yet-ripe trades — i.e. the
     // buffer plateaus instead of growing with stream length.
-    def tick(isLeft: Boolean, id: String, tsMs: Long): AsofTick =
-      AsofTick("S", isLeft, if (isLeft) id else null, 1.0,
-        if (isLeft) null else id, 2.0, new Timestamp(tsMs))
+    def tick(isLeft: Boolean, id: String, tsMs: Long): CoRow[Trade, Quote] = {
+      val t = new Timestamp(tsMs)
+      if (isLeft) CoRow("S", t, Trade(id, "S", 1.0, t), null)
+      else CoRow("S", t, null, Quote("S", id, 2.0, t))
+    }
     val batchMs = 1000L
     var st = AsofBuf(Nil, Nil)
     var emitted = 0
@@ -1253,5 +1254,100 @@ class StreamingSpec extends SparkSpec {
     emitted += tail.size
     assert(emitted === 100 * 5)
     assert(fin.trades.isEmpty && fin.quotes.size <= 1)
+  }
+
+  test("asofJoinExact on batch input equals the batch asofJoin") {
+    val got = Stateful.asofJoinExact(trades.toDS(), (quotesA :+ qB :+ qFlush).toDS(),
+      java.time.Duration.ofSeconds(60))
+    assert(countsOf(asofColumns(got.toDF())) === countsOf(asofFixpoint()))
+    assert(got.count() === 5)
+  }
+
+  /** `op` over two inputs as (batch rows, streamed rows), both multisets:
+    * once on batch Datasets of all of `batches`, once streamed with each
+    * (a, b) pair as one micro-batch.
+    */
+  private def batchAndStream[A: org.apache.spark.sql.Encoder, B: org.apache.spark.sql.Encoder, O](
+      batches: Seq[(Seq[A], Seq[B])])(op: (Dataset[A], Dataset[B]) => Dataset[O])
+      : (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
+    val batch = countsOf(op(batches.flatMap(_._1).toDS(), batches.flatMap(_._2).toDS()).toDF())
+    val (ams, adf) = Sources.memoryStream[A](spark)
+    val (bms, bdf) = Sources.memoryStream[B](spark)
+    val name = freshTable()
+    val q = Sinks.toMemory(op(adf.as[A], bdf.as[B]).toDF(), name, "append").start()
+    try batches.foreach { case (a, b) => ams.addData(a); bms.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    (batch, countsOf(spark.table(name)))
+  }
+
+  test("NULL-ts hostile rows: the stream-table join ignores them, batch and stream") {
+    import graft.streaming.ProfileUpdate
+    val profiles = Seq(ProfileUpdate("alice", "gold", ts("2024-01-01T00:00:00Z")),
+      ProfileUpdate("bob", "basic", ts("2024-01-01T00:00:00Z")))
+    val clean = batchAndStream(Seq((orders, profiles)))(Stateful.streamTableJoinExact)
+    val hostile = batchAndStream(Seq((orders :+ OrderEvent("oN", "alice", Nil, 1.0, null),
+      ProfileUpdate("alice", "tin", null) +: profiles)))(Stateful.streamTableJoinExact)
+    assert(hostile === clean)
+    assert(clean._1.values.sum === 3) // carol has no profile
+  }
+
+  test("a NULL user matches nothing in the stream-table join, batch and stream") {
+    import graft.streaming.ProfileUpdate
+    val t0 = ts("2024-01-01T00:00:00Z")
+    val profiles = Seq(ProfileUpdate("alice", "gold", t0))
+    val clean = batchAndStream(Seq((orders, profiles)))(Stateful.streamTableJoinExact)
+    // Kafka Streams ignores null-key records in joins; so does j1's DataFrame join
+    val hostile = batchAndStream(Seq((orders :+ OrderEvent("oNull", null, Nil, 1.0, t0),
+      ProfileUpdate(null, "silver", t0) +: profiles)))(Stateful.streamTableJoinExact)
+    assert(hostile === clean)
+    assert(clean._1.keys.map(_.head).toSet === Set("o1", "o3"))
+  }
+
+  test("NULL-ts hostile rows: the table-table join ignores them, batch and stream") {
+    import graft.streaming.ProfileUpdate
+    val left = Seq(ProfileUpdate("alice", "L1", ts("2024-01-01T00:00:00Z")),
+      ProfileUpdate("bob", "L1", ts("2024-01-01T00:00:02Z")))
+    val right = Seq(ProfileUpdate("alice", "R1", ts("2024-01-01T00:00:03Z")))
+    val clean = batchAndStream(Seq((left, right)))(Stateful.tableTableJoinExact)
+    val hostile = batchAndStream(Seq((left :+ ProfileUpdate("alice", "Lx", null),
+      ProfileUpdate("carol", "Rx", null) +: right)))(Stateful.tableTableJoinExact)
+    assert(hostile === clean)
+    assert(clean._1.values.sum === 3)
+  }
+
+  test("NULL-ts hostile rows: the FK join ignores them, batch and stream") {
+    import graft.streaming.{ChildUpdate, FkSubscription, ProfileUpdate}
+    val t = (s: Int) => ts(f"2024-01-01T00:00:$s%02dZ")
+    val children = Seq(ChildUpdate("c1", "p1", "v1", t(0)), ChildUpdate("c2", "p1", "v2", t(2)))
+    val parents = Seq(ProfileUpdate("p1", "P1", t(1)))
+    // batch: both stages, with a NULL-ts child move and a NULL-ts parent
+    val fk = (c: Seq[ChildUpdate], p: Seq[ProfileUpdate]) =>
+      countsOf(Stateful.fkTableJoinExact(c.toDS(), p.toDS()).toDF())
+    val cleanBatch = fk(children, parents)
+    assert(fk(children :+ ChildUpdate("c1", "p2", "vx", null),
+      parents :+ ProfileUpdate("p1", "Px", null)) === cleanBatch)
+    assert(cleanBatch.values.sum === 2)
+    // stream: stage 2, the co-group
+    val subs = Seq(FkSubscription("p1", "c1", "v1", subscribe = true, t(0)),
+      FkSubscription("p1", "c2", "v2", subscribe = true, t(2)))
+    val clean = batchAndStream(Seq((subs, parents)))(Stateful.fkJoinResponses)
+    val hostile = batchAndStream(Seq((subs :+ FkSubscription("p1", "c9", "vx", subscribe = true,
+      null), ProfileUpdate("p1", "Px", null) +: parents)))(Stateful.fkJoinResponses)
+    assert(hostile === clean)
+    assert(clean._2 === cleanBatch)
+  }
+
+  test("NULL-ts hostile rows: the as-of join ignores them, batch and stream") {
+    import graft.streaming.Stateful.{Quote, Trade}
+    val op = (t: Dataset[Trade], q: Dataset[Quote]) =>
+      Stateful.asofJoinExact(t, q, java.time.Duration.ofSeconds(60))
+    // the schedule of the out-of-order test: batch 3 flushes A, a timer flushes B
+    def run(tN: Seq[Trade], qN: Seq[Quote]) = batchAndStream(Seq(
+      (trades.take(2) ++ tN, quotesA.take(1) ++ qN),
+      (trades.drop(2), quotesA.drop(1) :+ qB),
+      (Seq.empty[Trade], Seq(qFlush))))(op)
+    val clean = run(Nil, Nil)
+    assert(run(Seq(Trade("tN", "A", 9.0, null)), Seq(Quote("A", "qz", 99.0, null))) === clean)
+    assert(clean._1 === clean._2 && clean._1.values.sum === 5)
   }
 }
