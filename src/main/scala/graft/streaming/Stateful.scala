@@ -85,19 +85,13 @@ final case class SlidingBuf(ts: Seq[Long])
   */
 final case class SlidingCount(user: String, endMs: Long, cnt: Long)
 
-/** Custom per-key state — the GENERAL form of the reference's windowed
-  * custom fold (`aggregate(initializer)(adder)`, KSA:146-148). The
-  * built-in aggregates cover the reference's actual folds (count); this is
-  * the escape hatch a user needs the moment their adder isn't expressible
-  * as a SQL aggregate: `KeyValueGroupedDataset.mapGroupsWithState` holds
-  * one accumulator per key in the state store (RocksDB-backed at scale,
-  * exactly the role of Kafka Streams' per-key state stores), and emits the
-  * refreshed value each micro-batch (update mode = toStream changelog).
-  *
-  * Scale notes: state is partitioned by key across executors; memory is
-  * O(distinct keys × accumulator size) cluster-wide. For keys that stop
-  * arriving, use [[Stateful.runningTotalsTtl]] — unbounded key spaces
-  * need ttl'd state, same discipline as compacted-topic retention.
+/** The stateful stream operators: Kafka Streams' per-key state stores on
+  * Spark's group-state APIs. The append-mode keyed operators share two
+  * layers — [[Stateful.keyed]], the one `flatMapGroupsWithState` that
+  * decides grouping, per-batch order, timeouts and the NULL-time rule, and
+  * [[Stateful.coGroup]], the two-input envelope over it — and each is a
+  * `step` over one of them; the update-mode running totals and the
+  * `transformWithState` processors call Spark's APIs directly.
   */
 object Stateful {
 
@@ -113,10 +107,12 @@ object Stateful {
         acc.amount + e.amount)
     }
 
-  /** Running (orders, products, amount) totals per user, one state entry
-    * per key, updated per micro-batch. Works on batch Datasets too (state
-    * starts empty, one group pass) — the shared-fixpoint property the
-    * streaming tests assert.
+  /** Running (orders, products, amount) totals per user — the general form of
+    * the reference's custom fold (`aggregate(initializer)(adder)`, KSA:146-148)
+    * for an adder no SQL aggregate expresses: one accumulator per key, the
+    * refreshed value emitted each micro-batch (update mode = the toStream
+    * changelog). Works on batch Datasets too (one group pass) — the
+    * shared-fixpoint property the tests assert. Idle keys: [[runningTotalsTtl]].
     */
   def runningTotals(orders: Dataset[OrderEvent]): Dataset[UserTotals] = {
     val spark = orders.sparkSession
@@ -131,8 +127,8 @@ object Stateful {
       }
   }
 
-  /** [[runningTotals]] with idle-state TTL — the discipline the object
-    * scaladoc above demands for unbounded key spaces: a key that receives
+  /** [[runningTotals]] with idle-state TTL — the discipline unbounded key
+    * spaces need, as compacted-topic retention: a key that receives
     * no events for `idleMs` of EVENT time has its accumulator DROPPED from
     * the state store once the watermark passes its idle deadline, so
     * cluster-wide state is bounded by (active keys × accumulator size)
@@ -185,31 +181,47 @@ object Stateful {
       }
   }
 
-  /** THE keyed two-input co-group: the per-key state store Kafka Streams
-    * puts behind each two-input join (`KStream.join(KTable)` KSA:162-165,
-    * the table-table and FK table joins, `KStream.join(…, JoinWindows)`
-    * KSA:177-186). Every two-input stateful operator in this package is a
-    * `step` over it:
+  /** THE keyed step: the per-key state store Kafka Streams puts behind
+    * every stateful DSL operator (KSA:146-148, KSA:162-186), as one
+    * append-mode `flatMapGroupsWithState` over `in` grouped by `key`;
+    * `step` owns the state.
     *
-    *  - Envelope: each input row becomes a [[CoRow]] under its side's key
-    *    column, whole as that side's struct next to a typed null for the
-    *    other side — column expressions, no typed map over either input.
-    *  - Grouping: the union, `groupByKey` on the key, one append-mode
-    *    `flatMapGroupsWithState`; `step` owns the state.
-    *  - Time: a watermarked stream gets the event-time timeout and `step`
-    *    gets the current watermark. Any other input (batch, or a stream
-    *    without a watermark) gets no timeout and `Long.MaxValue`: nothing
-    *    is pending, so a `step` that flushes on the watermark keeps no
-    *    state and arms no timeout. `unionDelay` puts one watermark on the
-    *    union (so one idle input cannot stall it); without it each input
-    *    keeps the watermark it arrives with.
-    *  - Per-batch order: event time, then LEFT before right, then
-    *    `tiebreak` (null sorts as ""). Without the tiebreaks equal-ts ties
-    *    keep shuffle arrival order and results vary across runs.
+    *  - Time: a stream whose `ts` carries a watermark gets the event-time
+    *    timeout and `step` the current watermark; Spark then also drops rows
+    *    at or below the previous batch's watermark (it does so only under
+    *    that timeout). Batch or unwatermarked input gets no timeout and
+    *    `Long.MaxValue`: a `step` that flushes on the watermark keeps no
+    *    state and arms no timeout.
+    *  - Per-batch order: `order`'s event time, then its tiebreak (null sorts
+    *    as ""), so equal-ts ties do not follow shuffle arrival order.
     *  - NULL event time: the row has no place in that order and is dropped
-    *    before the union — the unplaceable-record contract of
-    *    [[graft.ops.Relational.asofJoin]]. With `keepUntimed` such rows
-    *    reach `step` instead, ahead of every timed row.
+    *    (the unplaceable-record contract of [[graft.ops.Relational.asofJoin]]);
+    *    with `keepUntimed` it reaches `step` ahead of every timed row.
+    */
+  private[streaming] def keyed[T, S: Encoder, O: Encoder](in: Dataset[T], key: T => String,
+      order: T => (Timestamp, String), keepUntimed: Boolean = false)(
+      step: (String, Long, Seq[T], GroupState[S]) => Iterator[O]): Dataset[O] = {
+    val watermarked =
+      in.isStreaming && in.schema("ts").metadata.contains(EventTimeWatermark.delayKey)
+    val sortKey = (t: T) => {
+      val (ts, tiebreak) = order(t)
+      (if (ts == null) Long.MinValue else ts.getTime, Option(tiebreak).getOrElse(""))
+    }
+    (if (keepUntimed) in else in.filter(col("ts").isNotNull)).groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(),
+        if (watermarked) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
+        (k: String, rows: Iterator[T], state: GroupState[S]) =>
+          val wm = if (watermarked) state.getCurrentWatermarkMs() else Long.MaxValue
+          step(k, wm, rows.toSeq.sortBy(sortKey), state)
+      }
+  }
+
+  /** The two-input co-group, a [[keyed]] step over the union of both inputs
+    * as [[CoRow]]s: each row under its side's key column, whole as that
+    * side's struct next to a typed null (column expressions, no typed map).
+    * Equal-ts rows put the LEFT side first. `unionDelay` puts one watermark
+    * on the union (so one idle input cannot stall it); without it each
+    * input keeps its own.
     */
   private[streaming] def coGroup[L <: Product : TypeTag, R <: Product : TypeTag,
       S: Encoder, O: Encoder](left: Dataset[L], right: Dataset[R], leftKey: String,
@@ -220,22 +232,13 @@ object Stateful {
     def whole(s: StructType): Column =
       struct(s.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     def tagged(in: Dataset[_], key: String, l: Column, r: Column) =
-      (if (keepUntimed) in.toDF() else in.filter(col("ts").isNotNull))
-        .select(col(key).as("key"), col("ts"), l.as("left"), r.as("right"))
+      in.select(col(key).as("key"), col("ts"), l.as("left"), r.as("right"))
     val union = tagged(left, leftKey, whole(ls), lit(null).cast(rs))
       .unionByName(tagged(right, rightKey, lit(null).cast(ls), whole(rs)))
-    val co = unionDelay.fold(union)(union.withWatermark("ts", _))
-    val watermarked =
-      co.isStreaming && co.schema("ts").metadata.contains(EventTimeWatermark.delayKey)
-    val order = (r: CoRow[L, R]) => (if (r.ts == null) Long.MinValue else r.ts.getTime,
-      if (r.left != null) 0 else 1, Option(tiebreak(r)).getOrElse(""))
-    co.as(Encoders.product[CoRow[L, R]]).groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState[S, O](OutputMode.Append(),
-        if (watermarked) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[CoRow[L, R]], state: GroupState[S]) =>
-          val wm = if (watermarked) state.getCurrentWatermarkMs() else Long.MaxValue
-          step(key, wm, rows.toSeq.sortBy(order), state)
-      }
+    keyed[CoRow[L, R], S, O](unionDelay.fold(union)(union.withWatermark("ts", _))
+        .as(Encoders.product[CoRow[L, R]]), _.key,
+      r => (r.ts, (if (r.left != null) "0" else "1") + Option(tiebreak(r)).getOrElse("")),
+      keepUntimed)(step)
   }
 
   /** EXACT KTable–KTable join (`ktableA.outerJoin(ktableB)` — the DSL's
@@ -247,7 +250,8 @@ object Stateful {
     * stream is the join's changelog; its last row per key is the batch
     * full-outer join of the two compacted tables (the fixpoint property
     * StreamingSpec pins). A [[coGroup]] step; equal-ts ties break on the
-    * value.
+    * value. A NULL user emits nothing, as Kafka Streams' table sources
+    * drop null-key records.
     *
     * Scale: state is two values per distinct key, partitioned across
     * executors — the same O(keys) posture as Kafka Streams' two RocksDB
@@ -259,13 +263,16 @@ object Stateful {
     import spark.implicits._
     coGroup[ProfileUpdate, ProfileUpdate, PairState, JoinedPair](left, right, "user", "user",
       r => Option(r.left).getOrElse(r.right).profile) { (user, _, rows, state) =>
-      var st = state.getOption.getOrElse(PairState(null, null))
-      val out = rows.map { e =>
-        st = if (e.left != null) st.copy(left = e.left.profile) else st.copy(right = e.right.profile)
-        JoinedPair(user, st.left, st.right, e.ts)
+      if (user == null) Iterator.empty
+      else {
+        var st = state.getOption.getOrElse(PairState(null, null))
+        val out = rows.map { e =>
+          st = if (e.left != null) st.copy(left = e.left.profile) else st.copy(right = e.right.profile)
+          JoinedPair(user, st.left, st.right, e.ts)
+        }
+        state.update(st)
+        out.iterator
       }
-      state.update(st)
-      out.iterator
     }
   }
 
@@ -278,28 +285,26 @@ object Stateful {
     * stream per group — a plain update-mode aggregation downstream, the
     * second hop — maintains the live re-grouped counts; the batch
     * composition's fixpoint is `compactLatest → groupBy count`
-    * (`g4_table_regroup`, spec-pinned).
+    * (`g4_table_regroup`, spec-pinned). A [[keyed]] step; equal-ts ties
+    * break on the new group.
     */
   def tableRegroupDeltas(upserts: Dataset[ProfileUpdate]): Dataset[RegroupDelta] = {
     val spark = upserts.sparkSession
     import spark.implicits._
-    upserts.groupByKey(_.user)
-      .flatMapGroupsWithState[String, RegroupDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: String, es: Iterator[ProfileUpdate], state: GroupState[String]) =>
-          val out = Seq.newBuilder[RegroupDelta]
-          var group = state.getOption.orNull
-          es.toSeq.sortBy(e =>
-              (e.ts.getTime, Option(e.profile).getOrElse(""))).foreach { e =>
-            if (e.profile != group) {
-              if (group != null) out += RegroupDelta(group, -1L, e.ts)
-              if (e.profile != null) out += RegroupDelta(e.profile, 1L, e.ts)
-              group = e.profile
-            }
+    keyed[ProfileUpdate, String, RegroupDelta](upserts, _.user, e => (e.ts, e.profile)) {
+      (_, _, es, state) =>
+        val out = Seq.newBuilder[RegroupDelta]
+        var group = state.getOption.orNull
+        es.foreach { e =>
+          if (e.profile != group) {
+            if (group != null) out += RegroupDelta(group, -1L, e.ts)
+            if (e.profile != null) out += RegroupDelta(e.profile, 1L, e.ts)
+            group = e.profile
           }
-          if (group != null) state.update(group) else state.remove()
-          out.result().iterator
-      }
+        }
+        if (group != null) state.update(group) else state.remove()
+        out.result().iterator
+    }
   }
 
   /** STREAMING sliding windows (KS `SlidingWindows.ofTimeDifference` —
@@ -316,36 +321,35 @@ object Stateful {
     * State and lateness: timestamps older than `maxSeen − size − grace`
     * are pruned and arrivals older than `maxSeen − grace` are dropped
     * (the grace contract), so per-key state is bounded by
-    * rate × (size + grace) — the KS store bound.
+    * rate × (size + grace) — the KS store bound. A [[keyed]] step;
+    * equal-ts ties break on orderId.
     */
   def slidingCounts(events: Dataset[OrderEvent], sizeMs: Long,
       graceMs: Long): Dataset[SlidingCount] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.user)
-      .flatMapGroupsWithState[SlidingBuf, SlidingCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: String, es: Iterator[OrderEvent], state: GroupState[SlidingBuf]) =>
-          val out = Seq.newBuilder[SlidingCount]
-          var buf = state.getOption.map(_.ts.toVector).getOrElse(Vector.empty[Long])
-          var maxSeen = if (buf.isEmpty) Long.MinValue else buf.max
-          es.toSeq.sortBy(e => (e.ts.getTime, e.orderId)).foreach { e =>
-            val t = e.ts.getTime
-            if (maxSeen == Long.MinValue || t >= maxSeen - graceMs) {
-              buf = buf :+ t
-              maxSeen = math.max(maxSeen, t)
-              // windows this arrival touches: distinct ends in [t, t+size)
-              buf.filter(t2 => t2 >= t && t2 < t + sizeMs).distinct.sorted
-                .foreach { t2 =>
-                  out += SlidingCount(user, t2,
-                    buf.count(t0 => t0 > t2 - sizeMs && t0 <= t2))
-                }
-              buf = buf.filter(_ >= maxSeen - sizeMs - graceMs)
-            } // else: beyond grace — dropped, like a watermark-late row
-          }
-          state.update(SlidingBuf(buf))
-          out.result().iterator
-      }
+    keyed[OrderEvent, SlidingBuf, SlidingCount](events, _.user, e => (e.ts, e.orderId)) {
+      (user, _, es, state) =>
+        val out = Seq.newBuilder[SlidingCount]
+        var buf = state.getOption.map(_.ts.toVector).getOrElse(Vector.empty[Long])
+        var maxSeen = if (buf.isEmpty) Long.MinValue else buf.max
+        es.foreach { e =>
+          val t = e.ts.getTime
+          if (maxSeen == Long.MinValue || t >= maxSeen - graceMs) {
+            buf = buf :+ t
+            maxSeen = math.max(maxSeen, t)
+            // windows this arrival touches: distinct ends in [t, t+size)
+            buf.filter(t2 => t2 >= t && t2 < t + sizeMs).distinct.sorted
+              .foreach { t2 =>
+                out += SlidingCount(user, t2,
+                  buf.count(t0 => t0 > t2 - sizeMs && t0 <= t2))
+              }
+            buf = buf.filter(_ >= maxSeen - sizeMs - graceMs)
+          } // else: beyond grace — dropped, like a watermark-late row
+        }
+        state.update(SlidingBuf(buf))
+        out.result().iterator
+    }
   }
 
   /** Stage 1 of the EXACT KTable FOREIGN-KEY join (Kafka Streams 2.4's
@@ -356,29 +360,26 @@ object Stateful {
     * stop fanning out to this child), and a subscribe to the new parent
     * carrying the child's current value. This is exactly the reference
     * DSL's subscription-topic re-key; the stage boundary that is a
-    * repartition topic there is a keyed exchange here. A NULL-ts child
-    * upsert is dropped, as in [[coGroup]].
+    * repartition topic there is a keyed exchange here. A [[keyed]] step;
+    * equal-ts ties break on the child's value.
     */
   def fkSubscriptions(children: Dataset[ChildUpdate]): Dataset[FkSubscription] = {
     val spark = children.sparkSession
     import spark.implicits._
-    children.filter(col("ts").isNotNull).groupByKey(_.id)
-      .flatMapGroupsWithState[String, FkSubscription](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (id: String, events: Iterator[ChildUpdate], state: GroupState[String]) =>
-          val out = Seq.newBuilder[FkSubscription]
-          var fk = state.getOption.orNull
-          events.toSeq.sortBy(e =>
-              (e.ts.getTime, Option(e.v).getOrElse(""))).foreach { e =>
-            if (fk != null && fk != e.fk)
-              out += FkSubscription(fk, id, null, subscribe = false, e.ts)
-            if (e.fk != null)
-              out += FkSubscription(e.fk, id, e.v, subscribe = true, e.ts)
-            fk = e.fk
-          }
-          if (fk != null) state.update(fk) else state.remove()
-          out.result().iterator
-      }
+    keyed[ChildUpdate, String, FkSubscription](children, _.id, e => (e.ts, e.v)) {
+      (id, _, events, state) =>
+        val out = Seq.newBuilder[FkSubscription]
+        var fk = state.getOption.orNull
+        events.foreach { e =>
+          if (fk != null && fk != e.fk)
+            out += FkSubscription(fk, id, null, subscribe = false, e.ts)
+          if (e.fk != null)
+            out += FkSubscription(e.fk, id, e.v, subscribe = true, e.ts)
+          fk = e.fk
+        }
+        if (fk != null) state.update(fk) else state.remove()
+        out.result().iterator
+    }
   }
 
   /** Stage 2 of the EXACT FK join: keyed by PARENT key, state = the
@@ -482,7 +483,8 @@ object Stateful {
   /** Streaming analog of [[graft.ops.Sequences.transitionCounts]]'s
     * pair extraction: per key, emit a (from, to) row for every
     * consecutive state pair, carrying the LAST state across micro-batches
-    * in per-key state (events inside a batch are sorted by event time;
+    * in per-key state (a [[keyed]] step: events inside a batch are in
+    * event-time order, then orderId, as the batch op orders them;
     * cross-batch order is arrival order, correct once the source is
     * per-key ordered — the Kafka-partition guarantee this engine's
     * sources model). Downstream, the same `groupBy(from, to).count`
@@ -493,27 +495,23 @@ object Stateful {
   def transitionPairs(events: Dataset[OrderEvent]): Dataset[(String, String)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.user)
-      .flatMapGroupsWithState[(Boolean, String), (String, String)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[OrderEvent], state: GroupState[(Boolean, String)]) =>
-          val out = Seq.newBuilder[(String, String)]
-          // (initialized, lastState) — lastState may be null (an event
-          // with no products), mirroring the batch op, whose NULL states
-          // occupy a position: the (x, null) pair is dropped, the
-          // (null, y) pair is kept with a null from_state
-          var (have, last) = state.getOption.getOrElse((false, null: String))
-          // orderId as the deterministic tiebreak within equal timestamps,
-          // mirroring the batch op's orderCols contract
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.orderId)).foreach { e =>
-            val s = e.products.headOption.orNull
-            if (have && s != null) out += ((last, s))
-            last = s
-            have = true
-          }
-          if (have) state.update((true, last))
-          out.result().iterator
+    keyed[OrderEvent, (Boolean, String), (String, String)](events, _.user,
+      e => (e.ts, e.orderId)) { (_, _, rows, state) =>
+      val out = Seq.newBuilder[(String, String)]
+      // (initialized, lastState) — lastState may be null (an event
+      // with no products), mirroring the batch op, whose NULL states
+      // occupy a position: the (x, null) pair is dropped, the
+      // (null, y) pair is kept with a null from_state
+      var (have, last) = state.getOption.getOrElse((false, null: String))
+      rows.foreach { e =>
+        val s = e.products.headOption.orNull
+        if (have && s != null) out += ((last, s))
+        last = s
+        have = true
       }
+      if (have) state.update((true, last))
+      out.result().iterator
+    }
   }
 
   /** The running-totals fold as a Spark 4 `StatefulProcessor`: state is a
@@ -953,13 +951,10 @@ object Stateful {
     coGroup[Trade, Quote, AsofBuf, AsofJoinedTrade](trades, quotes, "sym", "sym",
       r => Option(r.left).map(_.tradeId).getOrElse(r.right.quoteId),
       unionDelay = Some(s"${delay.toMillis} milliseconds")) { (sym, wm, rows, state) =>
-      // ingest, dropping sub-watermark stragglers (late-data policy; with
-      // no watermark nothing is late). Spark's flatMapGroupsWithState
-      // additionally pre-filters input older than the PREVIOUS batch's
-      // watermark before the function runs, so this filter only tightens
-      // the boundary to the current one — the strict ripeness in asofStep
-      // makes exactness hold from this filter alone, without leaning on
-      // the engine's one-batch-lag internal boundary
+      // ingest, dropping sub-watermark stragglers (with no watermark nothing
+      // is late). `keyed` already dropped rows at or below the PREVIOUS
+      // batch's watermark; this tightens the boundary to the current one, and
+      // the strict ripeness in asofStep makes exactness hold from it alone
       val admitted = if (wm == Long.MaxValue) rows else rows.filter(_.ts.getTime >= wm)
       val (next, out) =
         asofStep(sym, wm, state.getOption.getOrElse(AsofBuf(Nil, Nil)), admitted)

@@ -76,13 +76,26 @@ class EngineSpec extends SparkSpec {
     assert(hits === Nil)
   }
 
-  test("streaming/ unions two inputs only in the co-group helper; the per-join envelopes stay gone") {
-    // the helper's body: from its signature to its closing brace at member indent
-    val helper = """(?s)\n  private\[streaming\] def coGroup\[.*?\n  \}\n""".r
+  test("streaming/ groups with state only in keyed and runningTotalsTtl, unions only in coGroup; the per-join envelopes stay gone") {
+    // a member's body: from its signature to its closing brace at member indent
+    def body(signature: String) = ("""(?s)\n  """ + signature + """.*?\n  \}\n""").r
+    val (keyed, coGroup, ttl) = (body("""private\[streaming\] def keyed\["""),
+      body("""private\[streaming\] def coGroup\["""), body("""def runningTotalsTtl\("""))
     val streaming = scalaFiles("src/main/scala/graft/streaming").map(source)
-    val bodies = streaming.flatMap(helper.findAllIn(_))
-    assert(bodies.size === 1 && bodies.head.contains("unionByName"))
-    assert(!streaming.exists(helper.replaceAllIn(_, "").contains("unionByName")))
+    val Seq(keyedBody) = streaming.flatMap(keyed.findAllIn(_))
+    assert(keyedBody.contains(".flatMapGroupsWithState") && keyedBody.contains("sortBy"))
+    val Seq(ttlBody) = streaming.flatMap(ttl.findAllIn(_))
+    assert(ttlBody.contains(".flatMapGroupsWithState"))
+    val rest = streaming.map(src => Seq(keyed, ttl).foldLeft(src)((s, r) => r.replaceAllIn(s, "")))
+    assert(!rest.exists(_.contains(".flatMapGroupsWithState")))
+    // the one per-batch input order is the keyed step's; what else sorts is state
+    val stateSorts = Seq("st.children.toSeq.sortBy(_._1)", "done.sortBy(_.startMs)",
+      ".sortBy { case (p, c) => (-c, p) }", ".sortBy(q => (q.tsMs, q.tb))",
+      ".sortBy(t => (t.tsMs, t.tradeId))")
+    assert(!rest.exists(src => stateSorts.foldLeft(src)(_.replace(_, "")).contains("sortBy")))
+    val Seq(coGroupBody) = streaming.flatMap(coGroup.findAllIn(_))
+    assert(coGroupBody.contains("unionByName"))
+    assert(!streaming.exists(coGroup.replaceAllIn(_, "").contains("unionByName")))
     val gone = Seq("CoEvent", "TableSide", "FkEvent", "AsofTick", "J3Event", "fkCoEvents")
     val hits = scalaFiles("src/main/scala")
       .filter(p => gone.exists(source(p).contains))

@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -1263,22 +1265,31 @@ class StreamingSpec extends SparkSpec {
     assert(got.count() === 5)
   }
 
-  /** `op` over two inputs as (batch rows, streamed rows), both multisets:
-    * once on batch Datasets of all of `batches`, once streamed with each
-    * (a, b) pair as one micro-batch.
+  /** `op` as (batch rows, streamed rows), both multisets: once on a batch
+    * Dataset of all of `batches`, once streamed with each element of
+    * `batches` as one micro-batch.
     */
-  private def batchAndStream[A: org.apache.spark.sql.Encoder, B: org.apache.spark.sql.Encoder, O](
-      batches: Seq[(Seq[A], Seq[B])])(op: (Dataset[A], Dataset[B]) => Dataset[O])
-      : (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
-    val batch = countsOf(op(batches.flatMap(_._1).toDS(), batches.flatMap(_._2).toDS()).toDF())
-    val (ams, adf) = Sources.memoryStream[A](spark)
-    val (bms, bdf) = Sources.memoryStream[B](spark)
+  private def batchAndStream1[A: org.apache.spark.sql.Encoder, O](batches: Seq[Seq[A]])(
+      op: Dataset[A] => Dataset[O]): (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
+    val batch = countsOf(op(batches.flatten.toDS()).toDF())
+    val (ms, df) = Sources.memoryStream[A](spark)
     val name = freshTable()
-    val q = Sinks.toMemory(op(adf.as[A], bdf.as[B]).toDF(), name, "append").start()
-    try batches.foreach { case (a, b) => ams.addData(a); bms.addData(b); q.processAllAvailable() }
+    val q = Sinks.toMemory(op(df.as[A]).toDF(), name, "append").start()
+    try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
     finally q.stop()
     (batch, countsOf(spark.table(name)))
   }
+
+  /** [[batchAndStream1]] over two inputs, each (a, b) pair one micro-batch.
+    * Both inputs come from one tagged stream: fed as two sources, a
+    * trigger can start between the two `addData` calls and split the pair.
+    */
+  private def batchAndStream[A <: Product : TypeTag, B <: Product : TypeTag, O](
+      batches: Seq[(Seq[A], Seq[B])])(op: (Dataset[A], Dataset[B]) => Dataset[O])
+      : (Map[Seq[Any], Int], Map[Seq[Any], Int]) =
+    batchAndStream1(batches.map { case (a, b) =>
+      a.map(x => (Option(x), Option.empty[B])) ++ b.map(y => (Option.empty[A], Option(y)))
+    })(both => op(both.flatMap(_._1), both.flatMap(_._2)))
 
   test("NULL-ts hostile rows: the stream-table join ignores them, batch and stream") {
     import graft.streaming.ProfileUpdate
@@ -1291,7 +1302,7 @@ class StreamingSpec extends SparkSpec {
     assert(clean._1.values.sum === 3) // carol has no profile
   }
 
-  test("a NULL user matches nothing in the stream-table join, batch and stream") {
+  test("a NULL user matches nothing in the stream-table and table-table joins, batch and stream") {
     import graft.streaming.ProfileUpdate
     val t0 = ts("2024-01-01T00:00:00Z")
     val profiles = Seq(ProfileUpdate("alice", "gold", t0))
@@ -1301,6 +1312,14 @@ class StreamingSpec extends SparkSpec {
       ProfileUpdate(null, "silver", t0) +: profiles)))(Stateful.streamTableJoinExact)
     assert(hostile === clean)
     assert(clean._1.keys.map(_.head).toSet === Set("o1", "o3"))
+    // its table sources drop them, so NULL-user upserts on both sides pair with nothing
+    val right = Seq(ProfileUpdate("alice", "R", t0))
+    val tables = (l: Seq[ProfileUpdate], r: Seq[ProfileUpdate]) =>
+      batchAndStream(Seq((l, r)))(Stateful.tableTableJoinExact)
+    val cleanTables = tables(profiles, right)
+    assert(tables(ProfileUpdate(null, "silver", t0) +: profiles,
+      right :+ ProfileUpdate(null, "R", t0)) === cleanTables)
+    assert(cleanTables._1 === cleanTables._2 && cleanTables._1.values.sum === 2)
   }
 
   test("NULL-ts hostile rows: the table-table join ignores them, batch and stream") {
@@ -1349,5 +1368,54 @@ class StreamingSpec extends SparkSpec {
     val clean = run(Nil, Nil)
     assert(run(Seq(Trade("tN", "A", 9.0, null)), Seq(Quote("A", "qz", 99.0, null))) === clean)
     assert(clean._1 === clean._2 && clean._1.values.sum === 5)
+  }
+
+  test("NULL-ts hostile rows: the table re-group ignores them, batch and stream") {
+    import graft.streaming.ProfileUpdate
+    val t = (s: Int) => ts(f"2024-01-01T00:00:$s%02dZ")
+    val ups = Seq(ProfileUpdate("alice", "click", t(0)), ProfileUpdate("bob", "view", t(1)),
+      ProfileUpdate("alice", "view", t(2)), ProfileUpdate("bob", "cart", t(3)))
+    def run(nulls: Seq[ProfileUpdate]) =
+      batchAndStream1(Seq(ups.take(2) ++ nulls, ups.drop(2) ++ nulls))(Stateful.tableRegroupDeltas)
+    val clean = run(Nil)
+    assert(run(Seq(ProfileUpdate("alice", "cart", null), ProfileUpdate("bob", "click", null)))
+      === clean)
+    assert(clean._1 === clean._2 && clean._1.values.sum === 6)
+  }
+
+  test("NULL-ts hostile rows: sliding counts ignore them; a NULL orderId ties, batch and stream") {
+    def at(ms: Long) = new Timestamp(ms)
+    // o2 and the NULL-orderId row share an event time in one micro-batch
+    val b1 = Seq(OrderEvent("o1", "alice", Nil, 1.0, at(0)),
+      OrderEvent("o2", "alice", Nil, 1.0, at(3000)), OrderEvent(null, "alice", Nil, 1.0, at(3000)))
+    val b2 = Seq(OrderEvent("o4", "alice", Nil, 1.0, at(4000)))
+    def run(nulls: Seq[OrderEvent]) = batchAndStream1(Seq(b1 ++ nulls, b2 ++ nulls))(
+      Stateful.slidingCounts(_, sizeMs = 5000L, graceMs = 5000L))
+    val clean = run(Nil)
+    assert(run(Seq(OrderEvent("oN", "alice", Nil, 1.0, null))) === clean)
+    assert(clean._1 === clean._2)
+    assert(clean._1 === Map(Seq("alice", 0L, 1L) -> 1, Seq("alice", 3000L, 2L) -> 1,
+      Seq("alice", 3000L, 3L) -> 1, Seq("alice", 4000L, 4L) -> 1))
+  }
+
+  test("NULL-ts hostile rows: transition pairs ignore them; a NULL orderId sorts first, batch and stream") {
+    val t = (s: Int) => ts(f"2024-01-01T00:00:$s%02dZ")
+    // the NULL-orderId row ties e2's event time in one micro-batch
+    val b1 = Seq(OrderEvent("e1", "alice", Seq("a"), 1.0, t(1)),
+      OrderEvent("e2", "alice", Seq("b"), 1.0, t(2)), OrderEvent(null, "alice", Seq("c"), 1.0, t(2)))
+    val b2 = Seq(OrderEvent("e3", "alice", Seq("a"), 1.0, t(3)),
+      OrderEvent("e4", "bob", Seq("b"), 1.0, t(4)), OrderEvent("e5", "bob", Seq("a"), 1.0, t(5)))
+    def run(nulls: Seq[OrderEvent]) =
+      batchAndStream1(Seq(b1 ++ nulls, b2 ++ nulls))(Stateful.transitionPairs)
+    val clean = run(Nil)
+    assert(run(Seq(OrderEvent("eN", "alice", Seq("z"), 1.0, null),
+      OrderEvent("eM", "bob", Seq("z"), 1.0, null))) === clean)
+    assert(clean._1 === clean._2)
+    // the batch op orders NULLS FIRST on (ts, orderId): a → c → b → a, and b → a
+    val batch = graft.ops.Sequences.transitionCounts(col("user"), Seq(col("ts"), col("orderId")),
+      element_at(col("products"), 1))((b1 ++ b2).toDF()).collect()
+      .map(r => Seq[Any](r.getString(0), r.getString(1)) -> r.getLong(2).toInt).toMap
+    assert(clean._1 === batch)
+    assert(batch === Map(Seq("a", "c") -> 1, Seq("c", "b") -> 1, Seq("b", "a") -> 2))
   }
 }
