@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Time-series regularization over event streams: resample each key onto a
   * fixed grid and carry the last observation forward — the step that turns
   * irregular event data into model-ready regular series (and the batch
-  * fixpoint of a `transformWithState` timer emitting per-interval state).
+  * fixpoint of [[graft.streaming.Stateful.resampleTicks]], which emits each
+  * cell once the watermark closes it).
   *
   * Scale shape: per-key grid bounds come from one hash aggregate; the grid
   * itself is `explode(sequence(...))` — rows bounded by `range / step` per

@@ -8,8 +8,7 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions.{col, lit, struct}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Per-user running totals: the accumulator for [[Stateful.runningTotals]]. */
@@ -86,23 +85,22 @@ final case class SlidingBuf(ts: Seq[Long])
 final case class SlidingCount(user: String, endMs: Long, cnt: Long)
 
 /** The stateful stream operators: Kafka Streams' per-key state stores on
-  * Spark's group-state APIs. The append-mode keyed operators share two
-  * layers — [[Stateful.keyed]], the one `flatMapGroupsWithState` that
-  * decides grouping, per-batch order, timeouts and the NULL-time rule, and
-  * [[Stateful.coGroup]], the two-input envelope over it — and each is a
-  * `step` over one of them; the update-mode running totals and the
-  * `transformWithState` processors call Spark's APIs directly.
+  * one Spark group-state API. Every keyed operator is a `step` over
+  * [[Stateful.keyed]], the one `flatMapGroupsWithState` that decides
+  * grouping, per-batch order, timeouts, output mode and the NULL-time rule,
+  * or over [[Stateful.coGroup]], the two-input envelope on it. So each runs
+  * on the engine's default state store and on a batch Dataset.
   */
 object Stateful {
 
-  /** THE running-totals fold — the single definition every generation of
-    * the operator shares (`mapGroupsWithState`, event-time-TTL,
-    * `transformWithState`, and the batch fixpoint oracle), so the oracle
-    * cannot silently drift from the operators it checks.
+  /** THE running-totals fold, shared by [[runningTotals]],
+    * [[runningTotalsTtl]] and the batch fixpoint oracle
+    * [[runningTotalsBatch]], so the oracle cannot silently drift from the
+    * operators it checks.
     */
-  private[streaming] def foldTotals(user: String, prev: UserTotals,
+  private[streaming] def foldTotals(user: String, prev: Option[UserTotals],
       es: IterableOnce[OrderEvent]): UserTotals =
-    es.iterator.foldLeft(prev) { (acc, e) =>
+    es.iterator.foldLeft(prev.getOrElse(UserTotals(user, 0L, 0L, 0.0))) { (acc, e) =>
       UserTotals(user, acc.orders + 1, acc.products + e.products.size,
         acc.amount + e.amount)
     }
@@ -111,20 +109,20 @@ object Stateful {
     * the reference's custom fold (`aggregate(initializer)(adder)`, KSA:146-148)
     * for an adder no SQL aggregate expresses: one accumulator per key, the
     * refreshed value emitted each micro-batch (update mode = the toStream
-    * changelog). Works on batch Datasets too (one group pass) — the
+    * changelog). An update-mode [[keyed]] step over [[foldTotals]]; it never
+    * reads `ts`, so a NULL-ts row still counts, and equal-ts ties break on
+    * orderId. Works on batch Datasets too (one group pass) — the
     * shared-fixpoint property the tests assert. Idle keys: [[runningTotalsTtl]].
     */
   def runningTotals(orders: Dataset[OrderEvent]): Dataset[UserTotals] = {
     val spark = orders.sparkSession
     import spark.implicits._
-    orders.groupByKey(_.user)
-      .mapGroupsWithState[UserTotals, UserTotals](GroupStateTimeout.NoTimeout) {
-        (user: String, events: Iterator[OrderEvent], state: GroupState[UserTotals]) =>
-          val prev = state.getOption.getOrElse(UserTotals(user, 0L, 0L, 0.0))
-          val next = foldTotals(user, prev, events)
-          state.update(next)
-          next
-      }
+    keyed[OrderEvent, UserTotals, UserTotals](orders, _.user, e => (e.ts, e.orderId),
+      OutputMode.Update(), keepUntimed = true) { (user, _, es, state) =>
+      val next = foldTotals(user, state.getOption, es)
+      state.update(next)
+      Iterator.single(next)
+    }
   }
 
   /** [[runningTotals]] with idle-state TTL — the discipline unbounded key
@@ -141,57 +139,51 @@ object Stateful {
     * engine — deterministic, replayable, and free of the busy-spin
     * ProcessingTimeTimeout causes (its `shouldRunAnotherBatch` is
     * unconditionally true, so an armed idle deadline makes the engine run
-    * empty micro-batches back-to-back between data arrivals). The input
-    * must carry a watermark on `ts`; `watermarkDelay` applies it.
-    * Streaming-only by nature (timeouts never fire in batch — use
-    * [[runningTotals]] as the batch fixpoint).
-    *
-    * `flatMapGroupsWithState` rather than `mapGroupsWithState` because the
-    * timeout invocation must emit NOTHING (there is no refreshed value for
-    * an expiring key — mapGroups would be forced to re-emit stale totals).
+    * empty micro-batches back-to-back between data arrivals).
+    * `watermarkDelay` puts the watermark on `ts`. An update-mode [[keyed]]
+    * step, so a NULL-ts row is dropped; the expiry emits nothing. On a batch
+    * Dataset nothing expires and the output is [[runningTotals]]'.
     */
   def runningTotalsTtl(orders: Dataset[OrderEvent], idleMs: Long = 30L * 60 * 1000,
       watermarkDelay: String = "0 seconds"): Dataset[UserTotals] = {
     val spark = orders.sparkSession
     import spark.implicits._
-    orders.withWatermark("ts", watermarkDelay)
-      .as[OrderEvent]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[UserTotals, UserTotals](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout) {
-        (user: String, events: Iterator[OrderEvent], state: GroupState[UserTotals]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = events.toSeq // the fold AND the deadline both need them
-            val prev = state.getOption.getOrElse(UserTotals(user, 0L, 0L, 0.0))
-            val next = foldTotals(user, prev, evs)
-            state.update(next)
-            // re-arm on every batch that touches the key: idle time counts
-            // from LAST activity. Clamped above the current watermark —
-            // Spark rejects a deadline the watermark already passed (a key
-            // whose events arrive at the watermark edge still gets one
-            // full idle period).
-            val deadline = math.max(evs.map(_.ts.getTime).max + idleMs,
-              state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(deadline)
-            Iterator.single(next)
-          }
-      }
+    keyed[OrderEvent, UserTotals, UserTotals](orders.withWatermark("ts", watermarkDelay)
+        .as[OrderEvent], _.user, e => (e.ts, e.orderId), OutputMode.Update()) {
+      (user, wm, es, state) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val next = foldTotals(user, state.getOption, es)
+          state.update(next)
+          // re-arm on every batch that touches the key: idle time counts
+          // from LAST activity. Clamped above the current watermark —
+          // Spark rejects a deadline the watermark already passed (a key
+          // whose events arrive at the watermark edge still gets one
+          // full idle period).
+          if (wm < Long.MaxValue)
+            state.setTimeoutTimestamp(math.max(es.last.ts.getTime + idleMs, wm + 1))
+          Iterator.single(next)
+        }
+    }
   }
 
   /** THE keyed step: the per-key state store Kafka Streams puts behind
     * every stateful DSL operator (KSA:146-148, KSA:162-186), as one
-    * append-mode `flatMapGroupsWithState` over `in` grouped by `key`;
-    * `step` owns the state.
+    * `flatMapGroupsWithState` over `in` grouped by `key`; `step` owns the
+    * state.
     *
+    *  - Output: `mode` Append for a step that emits each row once, Update
+    *    for a changelog that re-emits a key's refreshed value. A streaming
+    *    query's output mode must match it.
     *  - Time: a stream whose `ts` carries a watermark gets the event-time
     *    timeout and `step` the current watermark; Spark then also drops rows
     *    at or below the previous batch's watermark (it does so only under
-    *    that timeout). Batch or unwatermarked input gets no timeout and
-    *    `Long.MaxValue`: a `step` that flushes on the watermark keeps no
-    *    state and arms no timeout.
+    *    that timeout), and fires a timeout only once the watermark strictly
+    *    passes it. Batch or unwatermarked input gets no timeout and
+    *    `Long.MaxValue`: there a `step` flushes everything and arms no
+    *    timeout.
     *  - Per-batch order: `order`'s event time, then its tiebreak (null sorts
     *    as ""), so equal-ts ties do not follow shuffle arrival order.
     *  - NULL event time: the row has no place in that order and is dropped
@@ -199,7 +191,7 @@ object Stateful {
     *    with `keepUntimed` it reaches `step` ahead of every timed row.
     */
   private[streaming] def keyed[T, S: Encoder, O: Encoder](in: Dataset[T], key: T => String,
-      order: T => (Timestamp, String), keepUntimed: Boolean = false)(
+      order: T => (Timestamp, String), mode: OutputMode, keepUntimed: Boolean = false)(
       step: (String, Long, Seq[T], GroupState[S]) => Iterator[O]): Dataset[O] = {
     val watermarked =
       in.isStreaming && in.schema("ts").metadata.contains(EventTimeWatermark.delayKey)
@@ -208,7 +200,7 @@ object Stateful {
       (if (ts == null) Long.MinValue else ts.getTime, Option(tiebreak).getOrElse(""))
     }
     (if (keepUntimed) in else in.filter(col("ts").isNotNull)).groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[S, O](OutputMode.Append(),
+      .flatMapGroupsWithState[S, O](mode,
         if (watermarked) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
         (k: String, rows: Iterator[T], state: GroupState[S]) =>
           val wm = if (watermarked) state.getCurrentWatermarkMs() else Long.MaxValue
@@ -238,7 +230,7 @@ object Stateful {
     keyed[CoRow[L, R], S, O](unionDelay.fold(union)(union.withWatermark("ts", _))
         .as(Encoders.product[CoRow[L, R]]), _.key,
       r => (r.ts, (if (r.left != null) "0" else "1") + Option(tiebreak(r)).getOrElse("")),
-      keepUntimed)(step)
+      OutputMode.Append(), keepUntimed)(step)
   }
 
   /** EXACT KTable–KTable join (`ktableA.outerJoin(ktableB)` — the DSL's
@@ -291,7 +283,8 @@ object Stateful {
   def tableRegroupDeltas(upserts: Dataset[ProfileUpdate]): Dataset[RegroupDelta] = {
     val spark = upserts.sparkSession
     import spark.implicits._
-    keyed[ProfileUpdate, String, RegroupDelta](upserts, _.user, e => (e.ts, e.profile)) {
+    keyed[ProfileUpdate, String, RegroupDelta](upserts, _.user, e => (e.ts, e.profile),
+      OutputMode.Append()) {
       (_, _, es, state) =>
         val out = Seq.newBuilder[RegroupDelta]
         var group = state.getOption.orNull
@@ -328,7 +321,8 @@ object Stateful {
       graceMs: Long): Dataset[SlidingCount] = {
     val spark = events.sparkSession
     import spark.implicits._
-    keyed[OrderEvent, SlidingBuf, SlidingCount](events, _.user, e => (e.ts, e.orderId)) {
+    keyed[OrderEvent, SlidingBuf, SlidingCount](events, _.user, e => (e.ts, e.orderId),
+      OutputMode.Append()) {
       (user, _, es, state) =>
         val out = Seq.newBuilder[SlidingCount]
         var buf = state.getOption.map(_.ts.toVector).getOrElse(Vector.empty[Long])
@@ -366,7 +360,8 @@ object Stateful {
   def fkSubscriptions(children: Dataset[ChildUpdate]): Dataset[FkSubscription] = {
     val spark = children.sparkSession
     import spark.implicits._
-    keyed[ChildUpdate, String, FkSubscription](children, _.id, e => (e.ts, e.v)) {
+    keyed[ChildUpdate, String, FkSubscription](children, _.id, e => (e.ts, e.v),
+      OutputMode.Append()) {
       (id, _, events, state) =>
         val out = Seq.newBuilder[FkSubscription]
         var fk = state.getOption.orNull
@@ -496,7 +491,7 @@ object Stateful {
     val spark = events.sparkSession
     import spark.implicits._
     keyed[OrderEvent, (Boolean, String), (String, String)](events, _.user,
-      e => (e.ts, e.orderId)) { (_, _, rows, state) =>
+      e => (e.ts, e.orderId), OutputMode.Append()) { (_, _, rows, state) =>
       val out = Seq.newBuilder[(String, String)]
       // (initialized, lastState) — lastState may be null (an event
       // with no products), mirroring the batch op, whose NULL states
@@ -514,52 +509,7 @@ object Stateful {
     }
   }
 
-  /** The running-totals fold as a Spark 4 `StatefulProcessor`: state is a
-    * typed `ValueState` declared in `init` with a DECLARATIVE TTL — the
-    * engine expires idle entries itself (lazily, on read/maintenance;
-    * wall-clock based), where the `mapGroupsWithState` generation
-    * hand-rolls timeout handling. No timers registered, so no
-    * timeout-driven micro-batches.
-    */
-  final class RunningTotalsProcessor(ttl: Duration)
-      extends StatefulProcessor[String, OrderEvent, UserTotals] {
-    @transient private var totals: ValueState[UserTotals] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[UserTotals]("totals",
-        Encoders.product[UserTotals], TTLConfig(ttl))
-    override def handleInputRows(user: String, rows: Iterator[OrderEvent],
-        timerValues: TimerValues): Iterator[UserTotals] = {
-      val prev = if (totals.exists()) totals.get() else UserTotals(user, 0L, 0L, 0.0)
-      val next = Stateful.foldTotals(user, prev, rows)
-      totals.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** [[runningTotals]] on `transformWithState` — the Spark 4 stateful API
-    * this engine targets going forward: typed state cells (value/list/map)
-    * per key, declarative TTL instead of hand-rolled timeouts, timers when
-    * event-driven expiry is needed. Requires the RocksDB state store
-    * provider (the scale-correct choice anyway — see the RocksDB test).
-    *
-    * Caveat shared with every processing-time stateful operator: in
-    * ProcessingTime mode `shouldRunAnotherBatch` is unconditionally true,
-    * so the query runs micro-batches CONTINUOUSLY (that is how TTL
-    * cleanup and timers get serviced between arrivals). Pace it with a
-    * processing-time trigger in production, and never wait on
-    * `processAllAvailable` in tests — the no-new-data signal it blocks on
-    * is never raised while batches keep self-scheduling; poll the sink.
-    */
-  def runningTotalsTws(orders: Dataset[OrderEvent],
-      ttl: Duration = Duration.ofMinutes(30)): Dataset[UserTotals] = {
-    val spark = orders.sparkSession
-    import spark.implicits._
-    orders.groupByKey(_.user)
-      .transformWithState(new RunningTotalsProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Update())
-  }
-
-  /** A session closed by [[SessionCloseProcessor]]: `[start, end)` with
+  /** A session closed by [[sessionClose]]: `[start, end)` with
     * `end = last event + gap` — exactly the interval Spark's own
     * `session_window(ts, gap)` assigns, so the batch session-window query
     * is the fixpoint oracle for the emitted stream.
@@ -570,92 +520,55 @@ object Stateful {
   /** Internal accumulator for one open session of one key. */
   final case class OpenSession(user: String, startMs: Long, lastMs: Long, cnt: Long)
 
-  /** Session-close emission via EVENT-TIME TIMERS — the
-    * `transformWithState` timer surface (`registerTimer` /
-    * `handleExpiredTimer`) that declarative TTL cannot express: TTL drops
-    * idle state silently, while a session close must EMIT a record when
-    * the watermark passes `last event + gap`. This is the event-driven
-    * output shape of CDC session analytics (emit the finished session
-    * exactly once, as soon as it is provably finished).
+  /** Stream of CLOSED sessions per user, each emitted exactly once, when the
+    * event-time watermark proves no further event can extend it — the
+    * event-driven output shape of CDC session analytics, which idle-state
+    * TTL cannot express (TTL drops state silently; a session close must
+    * EMIT a record).
     *
-    * Mechanics: the key holds a LIST of disjoint open sessions. Each
-    * event is the interval `[t, t + gap)`; it merges every open session
-    * it overlaps (possibly bridging two, possibly extending a session's
-    * START backward — an in-order impossibility, but routine under
-    * allowed lateness) or opens a new one. NOTHING is emitted while
-    * handling rows: a session separated by an in-batch gap is not yet
-    * provably closed, because a late-but-in-watermark event can still
-    * land in (or bridge) it — emission happens exclusively in
-    * `handleExpiredTimer`, once the watermark passes a session's
-    * `last + gap` (after which Spark itself drops any row that could
-    * still touch it — that is what makes the emission final). Timers are
-    * re-armed per open session after each batch.
+    * An append-mode [[keyed]] step whose state is the key's list of
+    * disjoint open sessions. Each event is the interval `[t, t + gap)`; it
+    * merges every open session it overlaps (possibly bridging two, possibly
+    * extending a session's START backward — an in-order impossibility, but
+    * routine under allowed lateness) or opens a new one. A session is
+    * emitted once the watermark reaches its `last + gap`, after which Spark
+    * drops every row that could still touch it. Before that, even a
+    * session an in-batch gap separates is open: a late-but-in-watermark
+    * event can still land in or bridge it. The timeout sits 1 ms below the
+    * earliest open end. On a batch Dataset every session is closed.
     *
     * Merge rule is strictly-less overlap (`[a, a+gap)` and `[b, b+gap)`
-    * merge iff they intersect; touching intervals do NOT) —
-    * byte-identical to `session_window`'s non-overlap semantics, which
-    * the streaming test asserts against the batch query.
-    */
-  final class SessionCloseProcessor(gapMs: Long)
-      extends StatefulProcessor[String, OrderEvent, ClosedSession] {
-    @transient private var sess: org.apache.spark.sql.streaming.ListState[OpenSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getListState[OpenSession]("sessions",
-        Encoders.product[OpenSession], TTLConfig.NONE)
-
-    private def closed(s: OpenSession): ClosedSession =
-      ClosedSession(s.user, new Timestamp(s.startMs),
-        new Timestamp(s.lastMs + gapMs), s.cnt)
-
-    override def handleInputRows(user: String, rows: Iterator[OrderEvent],
-        timerValues: TimerValues): Iterator[ClosedSession] = {
-      val open = scala.collection.mutable.ArrayBuffer.empty[OpenSession]
-      open ++= sess.get()
-      rows.foreach { e =>
-        val t = e.ts.getTime
-        // sessions the event-interval [t, t+gap) strictly overlaps
-        val (touched, rest) = open.partition(s =>
-          t < s.lastMs + gapMs && s.startMs < t + gapMs)
-        val merged =
-          if (touched.isEmpty) OpenSession(user, t, t, 1L)
-          else OpenSession(user,
-            math.min(t, touched.map(_.startMs).min),
-            math.max(t, touched.map(_.lastMs).max),
-            touched.map(_.cnt).sum + 1L)
-        open.clear()
-        open ++= rest += merged
-      }
-      sess.put(open.toArray)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      open.foreach(s => getHandle.registerTimer(s.lastMs + gapMs))
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(user: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[ClosedSession] = {
-      val expiry = expiredTimerInfo.getExpiryTimeInMs()
-      val all = sess.get().toSeq
-      val (done, still) = all.partition(s => s.lastMs + gapMs <= expiry)
-      if (still.isEmpty) sess.clear() else sess.put(still.toArray)
-      done.sortBy(_.startMs).map(closed).iterator
-    }
-  }
-
-  /** Stream of CLOSED sessions per user, emitted exactly once each when
-    * the event-time watermark proves no further event can extend them.
-    * Batch fixpoint: `groupBy(session_window(ts, gap), user).count` over
-    * the same events (the o7 query shape).
+    * merge iff they intersect; touching intervals do NOT) — byte-identical
+    * to `session_window`'s non-overlap semantics. Batch fixpoint:
+    * `groupBy(session_window(ts, gap), user).count` over the same events
+    * (the o7 query shape).
     */
   def sessionClose(events: Dataset[OrderEvent], gapMs: Long,
       watermarkDelay: String = "0 seconds"): Dataset[ClosedSession] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermarkDelay)
-      .as[OrderEvent]
-      .groupByKey(_.user)
-      .transformWithState(new SessionCloseProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    keyed[OrderEvent, Seq[OpenSession], ClosedSession](events.withWatermark("ts", watermarkDelay)
+        .as[OrderEvent], _.user, e => (e.ts, e.orderId), OutputMode.Append()) {
+      (user, wm, rows, state) =>
+        val open = rows.foldLeft(state.getOption.getOrElse(Nil)) { (open, e) =>
+          val t = e.ts.getTime
+          // sessions the event interval [t, t+gap) strictly overlaps
+          val (touched, rest) = open.partition(s =>
+            t < s.lastMs + gapMs && s.startMs < t + gapMs)
+          rest :+ touched.foldLeft(OpenSession(user, t, t, 1L)) { (m, s) =>
+            OpenSession(user, math.min(m.startMs, s.startMs), math.max(m.lastMs, s.lastMs),
+              m.cnt + s.cnt)
+          }
+        }
+        val (done, still) = open.partition(_.lastMs + gapMs <= wm)
+        if (still.isEmpty) state.remove()
+        else {
+          state.update(still)
+          state.setTimeoutTimestamp(still.map(_.lastMs).min + gapMs - 1)
+        }
+        done.sortBy(_.startMs).iterator.map(s => ClosedSession(user, new Timestamp(s.startMs),
+          new Timestamp(s.lastMs + gapMs), s.cnt))
+    }
   }
 
   /** One emitted grid cell of [[resampleTicks]]: at `gridMs` (cell start,
@@ -674,14 +587,14 @@ object Stateful {
   final case class GridCursor(nextCell: Long, carryMs: Long, carryV: Double,
       hasCarry: Boolean, emitted: Boolean)
 
-  /** The STREAMING twin of [[graft.ops.Timeseries.resampleFfill]]: emit one
-    * tick per `stepMs` grid cell per key, forward-filling from the latest
-    * observation, each cell exactly once — when the watermark passes its
-    * end, which is the moment the cell is provably complete (any later row
-    * that could land in it would be dropped as beyond-watermark). Emission
-    * happens ONLY in `handleExpiredTimer`; `handleInputRows` just buffers
-    * observations and (re-)arms the next cell's timer.
+  /** The STREAMING twin of [[graft.ops.Timeseries.resampleFfill]]: one tick
+    * per `stepMs` grid cell per key (cell start in epoch ms), forward-filled
+    * from the latest observation, each cell emitted exactly once — when the
+    * watermark reaches its end, the moment it is provably complete (any
+    * later row that could land in it is dropped as beyond-watermark).
     *
+    * An append-mode [[keyed]] step whose state is the key's cursor and its
+    * buffered observations; the timeout sits 1 ms below the next cell's end.
     * Same-cell ties resolve to the lexicographically greatest `(ms, v)`,
     * matching the batch operator exactly. Before anything is emitted, a
     * late-but-in-watermark observation may move the grid start BACKWARD
@@ -689,85 +602,45 @@ object Stateful {
     * begun the watermark itself guarantees no row below the cursor can
     * arrive. Ticks continue for gap cells as long as the watermark
     * advances — unbounded forward fill; real deployments bound dead keys
-    * with a TTL or an end-of-series marker.
-    */
-  final class ResampleProcessor(stepMs: Long)
-      extends StatefulProcessor[String, OrderEvent, GridTick] {
-    @transient private var cursor: ValueState[GridCursor] = _
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[Obs] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      cursor = getHandle.getValueState[GridCursor]("cursor",
-        Encoders.product[GridCursor], TTLConfig.NONE)
-      pending = getHandle.getListState[Obs]("pending",
-        Encoders.product[Obs], TTLConfig.NONE)
-    }
-
-    private def bucket(ms: Long): Long = ms - java.lang.Math.floorMod(ms, stepMs)
-
-    override def handleInputRows(user: String, rows: Iterator[OrderEvent],
-        timerValues: TimerValues): Iterator[GridTick] = {
-      var c = if (cursor.exists()) cursor.get()
-        else GridCursor(Long.MaxValue, 0L, 0.0, hasCarry = false, emitted = false)
-      rows.foreach { e =>
-        val ms = e.ts.getTime
-        pending.appendValue(Obs(ms, e.amount))
-        val b = bucket(ms)
-        // grid start: min observed bucket, movable only pre-emission
-        // (post-emission the watermark filter makes b < nextCell impossible)
-        if (b < c.nextCell && !c.emitted) c = c.copy(nextCell = b)
-      }
-      cursor.update(c)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(c.nextCell + stepMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(user: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[GridTick] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      var c = cursor.get()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Obs]
-      buf ++= pending.get()
-      val out = scala.collection.mutable.ArrayBuffer.empty[GridTick]
-      while (c.nextCell + stepMs <= wm) {
-        val cellEnd = c.nextCell + stepMs
-        val (ripe, rest) = buf.partition(_.ms < cellEnd)
-        buf.clear(); buf ++= rest
-        val carry0: Option[Obs] =
-          if (c.hasCarry) Some(Obs(c.carryMs, c.carryV)) else None
-        val best = ripe.foldLeft(carry0) {
-          case (Some(b), o) =>
-            if (o.ms > b.ms || (o.ms == b.ms && o.v > b.v)) Some(o) else Some(b)
-          case (None, o) => Some(o)
-        }
-        best.foreach { b =>
-          out += GridTick(user, c.nextCell, b.v)
-          c = c.copy(carryMs = b.ms, carryV = b.v, hasCarry = true, emitted = true)
-        }
-        c = c.copy(nextCell = cellEnd)
-      }
-      if (buf.isEmpty) pending.clear() else pending.put(buf.toArray)
-      cursor.update(c)
-      getHandle.registerTimer(c.nextCell + stepMs)
-      out.iterator
-    }
-  }
-
-  /** Stream of forward-filled grid ticks per user (cell start in epoch ms,
-    * one tick per cell, emitted exactly once when the watermark passes the
-    * cell's end). Batch fixpoint: [[graft.ops.Timeseries.resampleFfill]]
-    * over the same events, restricted to cells the watermark reached.
+    * with a TTL or an end-of-series marker. On a batch Dataset the grid
+    * stops at each key's last observed bucket, so the batch application is
+    * the batch operator.
     */
   def resampleTicks(events: Dataset[OrderEvent], stepMs: Long,
       watermarkDelay: String = "0 seconds"): Dataset[GridTick] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermarkDelay)
-      .as[OrderEvent]
-      .groupByKey(_.user)
-      .transformWithState(new ResampleProcessor(stepMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    def bucket(ms: Long): Long = ms - java.lang.Math.floorMod(ms, stepMs)
+    keyed[OrderEvent, (GridCursor, Seq[Obs]), GridTick](events.withWatermark("ts", watermarkDelay)
+        .as[OrderEvent], _.user, e => (e.ts, e.orderId), OutputMode.Append()) {
+      (user, wm, rows, state) =>
+        var (c, pending) = state.getOption.getOrElse(
+          (GridCursor(Long.MaxValue, 0L, 0.0, hasCarry = false, emitted = false), Seq.empty[Obs]))
+        pending ++= rows.map(e => Obs(e.ts.getTime, e.amount))
+        // grid start: min observed bucket, movable only pre-emission
+        // (post-emission the watermark filter makes b < nextCell impossible)
+        if (!c.emitted) c = c.copy(nextCell = bucket(pending.map(_.ms).min))
+        val end = if (wm < Long.MaxValue) wm else bucket(pending.map(_.ms).max) + stepMs
+        val out = Seq.newBuilder[GridTick]
+        while (c.nextCell + stepMs <= end) {
+          val cellEnd = c.nextCell + stepMs
+          val (ripe, rest) = pending.partition(_.ms < cellEnd)
+          pending = rest
+          val carry = if (c.hasCarry) Some(Obs(c.carryMs, c.carryV)) else None
+          val best = ripe.foldLeft(carry) {
+            case (Some(b), o) if o.ms < b.ms || (o.ms == b.ms && !(o.v > b.v)) => Some(b)
+            case (_, o) => Some(o)
+          }
+          best.foreach { b =>
+            out += GridTick(user, c.nextCell, b.v)
+            c = c.copy(carryMs = b.ms, carryV = b.v, hasCarry = true, emitted = true)
+          }
+          c = c.copy(nextCell = cellEnd)
+        }
+        state.update((c, pending))
+        if (wm < Long.MaxValue) state.setTimeoutTimestamp(c.nextCell + stepMs - 1)
+        out.result().iterator
+    }
   }
 
   /** One changelog row of [[topProducts]]: after `seq` events for `user`,
@@ -778,62 +651,30 @@ object Stateful {
   final case class TopProduct(user: String, seq: Long, product: String,
       cnt: Long, rank: Int)
 
-  /** Running per-key top-k products via MAP state — the `MapState` cell
-    * type of the Spark 4 stateful API (the value/list cells are covered
-    * by [[RunningTotalsProcessor]] / [[SessionCloseProcessor]]): one
-    * (product → count) entry per key per product, point-updated per
-    * arriving event — RocksDB reads/writes only the touched sub-keys,
-    * where a ValueState holding the whole map would rewrite it wholesale
-    * every batch (the reason MapState exists). After each batch the
-    * processor re-emits the key's refreshed top-k slate (cnt desc,
-    * product asc — deterministic ties), stamped with the key's event
-    * count as changelog version.
-    *
-    * State is O(distinct products per key); the emitted slate is O(k).
-    * No timers, no TTL → TimeMode.None, so the query only runs batches
-    * when data arrives (`processAllAvailable` is safe in tests).
-    */
-  final class TopProductsProcessor(k: Int)
-      extends StatefulProcessor[String, OrderEvent, TopProduct] {
-    @transient private var counts: org.apache.spark.sql.streaming.MapState[String, Long] = _
-    @transient private var seen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      counts = getHandle.getMapState[String, Long]("counts",
-        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-      seen = getHandle.getValueState[Long]("seen", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(user: String, rows: Iterator[OrderEvent],
-        timerValues: TimerValues): Iterator[TopProduct] = {
-      var n = if (seen.exists()) seen.get() else 0L
-      rows.foreach { e =>
-        n += 1
-        e.products.foreach { p =>
-          val cur = if (counts.containsKey(p)) counts.getValue(p) else 0L
-          counts.updateValue(p, cur + 1L)
-        }
-      }
-      seen.update(n)
-      counts.iterator().toSeq
-        .sortBy { case (p, c) => (-c, p) }
-        .take(k)
-        .zipWithIndex
-        .map { case ((p, c), i) => TopProduct(user, n, p, c, i + 1) }
-        .iterator
-    }
-  }
-
   /** Per-user running top-`k` product slate as an update-mode changelog
     * (the streaming twin of `groupBy(user, product).count` + bounded
-    * top-k). Requires the RocksDB state store provider.
+    * top-k). An update-mode [[keyed]] step whose state is the key's event
+    * count and its (product → count) map: one map value per key on the
+    * default store. Each batch re-emits the key's refreshed top-k slate
+    * (cnt desc, product asc — deterministic ties), stamped with the key's
+    * event count as changelog version. It never reads `ts`, so a NULL-ts
+    * row still counts. State is O(distinct products per key); the emitted
+    * slate is O(k).
     */
   def topProducts(events: Dataset[OrderEvent], k: Int): Dataset[TopProduct] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.user)
-      .transformWithState(new TopProductsProcessor(k),
-        TimeMode.None(), OutputMode.Update())
+    keyed[OrderEvent, (Long, Map[String, Long]), TopProduct](events, _.user,
+      e => (e.ts, e.orderId), OutputMode.Update(), keepUntimed = true) { (user, _, rows, state) =>
+      val (seen, counts) = state.getOption.getOrElse((0L, Map.empty[String, Long]))
+      val n = seen + rows.size
+      val next = rows.flatMap(_.products).foldLeft(counts) { (m, p) =>
+        m.updated(p, m.getOrElse(p, 0L) + 1L)
+      }
+      state.update((n, next))
+      next.toSeq.sortBy { case (p, c) => (-c, p) }.take(k).zipWithIndex
+        .map { case ((p, c), i) => TopProduct(user, n, p, c, i + 1) }.iterator
+    }
   }
 
   /** Batch reference fold for [[runningTotals]] — same arithmetic, same
@@ -841,7 +682,7 @@ object Stateful {
     */
   def runningTotalsBatch(spark: SparkSession, orders: Seq[OrderEvent]): Seq[UserTotals] =
     orders.groupBy(_.user).map { case (user, es) =>
-      foldTotals(user, UserTotals(user, 0L, 0L, 0.0), es)
+      foldTotals(user, None, es)
     }.toSeq
 
   /** A quote tick: the right (lookup) side of the streaming as-of join —

@@ -76,17 +76,15 @@ class EngineSpec extends SparkSpec {
     assert(hits === Nil)
   }
 
-  test("streaming/ groups with state only in keyed and runningTotalsTtl, unions only in coGroup; the per-join envelopes stay gone") {
+  test("streaming/ groups with state only in keyed, unions only in coGroup; the per-join envelopes and the second state API stay gone") {
     // a member's body: from its signature to its closing brace at member indent
     def body(signature: String) = ("""(?s)\n  """ + signature + """.*?\n  \}\n""").r
-    val (keyed, coGroup, ttl) = (body("""private\[streaming\] def keyed\["""),
-      body("""private\[streaming\] def coGroup\["""), body("""def runningTotalsTtl\("""))
+    val (keyed, coGroup) = (body("""private\[streaming\] def keyed\["""),
+      body("""private\[streaming\] def coGroup\["""))
     val streaming = scalaFiles("src/main/scala/graft/streaming").map(source)
     val Seq(keyedBody) = streaming.flatMap(keyed.findAllIn(_))
     assert(keyedBody.contains(".flatMapGroupsWithState") && keyedBody.contains("sortBy"))
-    val Seq(ttlBody) = streaming.flatMap(ttl.findAllIn(_))
-    assert(ttlBody.contains(".flatMapGroupsWithState"))
-    val rest = streaming.map(src => Seq(keyed, ttl).foldLeft(src)((s, r) => r.replaceAllIn(s, "")))
+    val rest = streaming.map(keyed.replaceAllIn(_, ""))
     assert(!rest.exists(_.contains(".flatMapGroupsWithState")))
     // the one per-batch input order is the keyed step's; what else sorts is state
     val stateSorts = Seq("st.children.toSeq.sortBy(_._1)", "done.sortBy(_.startMs)",
@@ -96,7 +94,9 @@ class EngineSpec extends SparkSpec {
     val Seq(coGroupBody) = streaming.flatMap(coGroup.findAllIn(_))
     assert(coGroupBody.contains("unionByName"))
     assert(!streaming.exists(coGroup.replaceAllIn(_, "").contains("unionByName")))
-    val gone = Seq("CoEvent", "TableSide", "FkEvent", "AsofTick", "J3Event", "fkCoEvents")
+    // the per-join envelopes and the second state API are gone from src/main
+    val gone = Seq("CoEvent", "TableSide", "FkEvent", "AsofTick", "J3Event", "fkCoEvents",
+      "transformWithState", "mapGroupsWithState", "StatefulProcessor")
     val hits = scalaFiles("src/main/scala")
       .filter(p => gone.exists(source(p).contains))
       .map(_.getFileName.toString)

@@ -255,6 +255,18 @@ class StreamingSpec extends SparkSpec {
     assert(rowsOf(out) === rowsOf(sessions(evs.toDF())))
   }
 
+  /** `sessionClose` rows as (user, start s, end s, cnt). */
+  private def sessionCols(df: DataFrame): DataFrame =
+    df.select(col("user"), col("start").cast("long").as("s"),
+      col("end").cast("long").as("e"), col("cnt"))
+
+  /** `sessionClose`'s batch fixpoint at a 5 s gap: the session-window count. */
+  private def sessionFixpoint(df: DataFrame): DataFrame =
+    df.groupBy(session_window(col("ts"), "5 seconds"), col("user"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("user"), col("session_window.start").cast("long").as("s"),
+        col("session_window.end").cast("long").as("e"), col("cnt"))
+
   test("event-time timers emit closed sessions matching the batch session_window fixpoint") {
     import graft.streaming.Stateful
     // gap = 5 s. alice: 0s,2s (one session) then 20s (a new one — the
@@ -268,33 +280,22 @@ class StreamingSpec extends SparkSpec {
     val carol = OrderEvent("c1", "carol", Seq("e"), 1.0, ts("2024-01-01T00:01:40Z"))
     val dave = OrderEvent("d1", "dave", Seq("f"), 1.0, ts("2024-01-01T00:03:20Z"))
     val erin = OrderEvent("e1", "erin", Seq("g"), 1.0, ts("2024-01-01T00:06:40Z"))
-    // transformWithState requires the RocksDB provider (multiple column
-    // families back the timer registry)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try {
-      runStream(Seq(evs, Seq(carol), Seq(dave), Seq(erin)), "append") { df =>
-        Stateful.sessionClose(df.as[OrderEvent], gapMs = 5000L).toDF()
-      }.select(col("user"), col("start").cast("long").as("s"),
-        col("end").cast("long").as("e"), col("cnt"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val out = sessionCols(runStream(Seq(evs, Seq(carol), Seq(dave), Seq(erin)), "append") { df =>
+      Stateful.sessionClose(df.as[OrderEvent], gapMs = 5000L).toDF()
+    })
     // erin's session stays open (the watermark stops at her event, never
     // passing her close time): emitted rows are exactly the PROVABLY
     // closed sessions
-    val batchFixpoint = Seq(evs, Seq(carol), Seq(dave)).flatten.toDF()
-      .groupBy(session_window(col("ts"), "5 seconds"), col("user"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("user"), col("session_window.start").cast("long").as("s"),
-        col("session_window.end").cast("long").as("e"), col("cnt"))
-    assert(rowsOf(out) === rowsOf(batchFixpoint))
+    assert(rowsOf(out) === rowsOf(sessionFixpoint(Seq(evs, Seq(carol), Seq(dave)).flatten.toDF())))
     assert(out.count() === 5) // alice x2, bob, carol, dave — each exactly once
+  }
+
+  test("sessionClose on batch input equals the batch session_window fixpoint") {
+    // every session is closed on a batch Dataset, the last one too
+    val evs = orders :+ OrderEvent("a9", "alice", Seq("z"), 1.0, ts("2024-01-01T00:00:16Z"))
+    val got = sessionCols(Stateful.sessionClose(evs.toDS(), gapMs = 5000L).toDF())
+    assert(countsOf(got) === countsOf(sessionFixpoint(evs.toDF())))
+    assert(got.count() === 4) // alice [1, 6) and [12, 21), bob, carol
   }
 
   test("late-but-in-watermark events extend sessions backward and are never emitted early") {
@@ -313,29 +314,11 @@ class StreamingSpec extends SparkSpec {
     val flush = Seq(
       OrderEvent("zz", "zz", Seq("x"), 1.0, ts("2024-01-01T01:00:00Z")),
       OrderEvent("z2", "zz", Seq("x"), 1.0, ts("2024-01-01T02:00:00Z")))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try {
-      runStream(Seq(batch1, late, flush.take(1), flush.drop(1)), "append") { df =>
-        Stateful.sessionClose(df.as[OrderEvent], gapMs = 5000L,
-          watermarkDelay = "2 minutes").toDF()
-      }.filter(col("user") === "alice")
-        .select(col("user"), col("start").cast("long").as("s"),
-          col("end").cast("long").as("e"), col("cnt"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-    val batchFixpoint = (batch1 ++ late).toDF()
-      .groupBy(session_window(col("ts"), "5 seconds"), col("user"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("user"), col("session_window.start").cast("long").as("s"),
-        col("session_window.end").cast("long").as("e"), col("cnt"))
-    assert(rowsOf(out) === rowsOf(batchFixpoint))
+    val out = sessionCols(runStream(Seq(batch1, late, flush.take(1), flush.drop(1)), "append") {
+      df => Stateful.sessionClose(df.as[OrderEvent], gapMs = 5000L,
+        watermarkDelay = "2 minutes").toDF()
+    }.filter(col("user") === "alice"))
+    assert(rowsOf(out) === rowsOf(sessionFixpoint((batch1 ++ late).toDF())))
     val base = Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
     assert(rowsOf(out) === Set(
       Seq("alice", base, base + 8, 2L), // [0, 8): late t=3 extended it
@@ -473,95 +456,41 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table(name).count() === 4)
   }
 
-  test("transformWithState running totals: fixpoint equality + declarative TTL expiry") {
+  test("keyed top-k: per-key slates reach the batch fixpoint") {
     import graft.streaming.Stateful
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val (ms, df) = Sources.memoryStream[OrderEvent](spark)
-      val name = freshTable()
-      // a ProcessingTime-mode stateful query self-schedules micro-batches
-      // continuously (TTL/timer servicing), so the no-new-data signal that
-      // processAllAvailable blocks on never fires — POLL the sink instead.
-      // TTL is wall-clock: 10 s leaves generous room for the cold RocksDB
-      // first batch between the two accumulating arrivals
-      val q = Stateful.runningTotalsTws(df.as[OrderEvent],
-          java.time.Duration.ofSeconds(10))
-        .toDF().writeStream.format("memory").queryName(name).outputMode("update").start()
-      def aliceRows(): Seq[Long] = spark.table(name)
-        .filter(col("user") === "alice").collect().map(_.getLong(1)).toSeq
-      def pollUntil(cond: => Boolean): Boolean = {
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (!cond && System.nanoTime() < deadline) Thread.sleep(100)
-        cond
-      }
-      ms.addData(orders.take(1))
-      assert(pollUntil(aliceRows().size == 1)) // alice: 1 order
-      ms.addData(Seq(orders(2)))
-      assert(pollUntil(aliceRows().size == 2)) // alice: 2 orders (accumulated)
-      Thread.sleep(11000) // exceed the 10 s TTL
-      ms.addData(Seq(OrderEvent("o6", "alice", Seq("Pen"), 1.0,
-        ts("2024-01-01T00:03:00Z"))))
-      assert(pollUntil(aliceRows().size == 3))
-      q.stop()
-      // 1, then 2 while the state is live; after the TTL, restart at 1
-      assert(aliceRows().sorted === Seq(1L, 1L, 2L))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val (ms, df) = Sources.memoryStream[OrderEvent](spark)
+    val name = freshTable()
+    val q = Stateful.topProducts(df.as[OrderEvent], k = 2)
+      .toDF().writeStream.format("memory").queryName(name).outputMode("update").start()
+    // cross-batch accumulation: alice buys Pen in three events split
+    // over two batches; the slate must count them all
+    val evs = Seq(
+      OrderEvent("t1", "alice", Seq("Pen", "Ink"), 1.0, ts("2024-01-01T00:00:01Z")),
+      OrderEvent("t2", "alice", Seq("Pen"), 1.0, ts("2024-01-01T00:00:02Z")),
+      OrderEvent("t3", "bob", Seq("Ink"), 1.0, ts("2024-01-01T00:00:03Z")),
+      OrderEvent("t4", "alice", Seq("Pen", "Pad", "Ink"), 1.0, ts("2024-01-01T00:00:04Z")),
+      OrderEvent("t5", "bob", Seq("Pad"), 1.0, ts("2024-01-01T00:00:05Z")))
+    ms.addData(evs.take(3)); q.processAllAvailable()
+    ms.addData(evs.drop(3)); q.processAllAvailable()
+    q.stop()
+    // latest slate per user = rows at that user's max changelog seq
+    val rows = spark.table(name).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getInt(4)))
+    val latest = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
+      val maxSeq = rs.map(_._2).max
+      rs.filter(_._2 == maxSeq).map(t => (t._1, t._3, t._4, t._5)).toSeq
+    }.toSet
+    // batch fixpoint: count occurrences across all events, top-2 by
+    // (cnt desc, product asc)
+    assert(latest === Set(
+      ("alice", "Pen", 3L, 1), ("alice", "Ink", 2L, 2),
+      ("bob", "Ink", 1L, 1), ("bob", "Pad", 1L, 2)))
+    // the first batch's alice slate was the intermediate (Pen 2, Ink 1)
+    assert(rows.filter(t => t._1 == "alice" && t._2 == 2L).map(t => (t._3, t._4)).toSet
+      === Set(("Pen", 2L), ("Ink", 1L)))
   }
 
-  test("transformWithState MapState top-k: per-key slates reach the batch fixpoint") {
-    import graft.streaming.Stateful
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val (ms, df) = Sources.memoryStream[OrderEvent](spark)
-      val name = freshTable()
-      val q = Stateful.topProducts(df.as[OrderEvent], k = 2)
-        .toDF().writeStream.format("memory").queryName(name).outputMode("update").start()
-      // cross-batch accumulation: alice buys Pen in three events split
-      // over two batches; the slate must count them all
-      val evs = Seq(
-        OrderEvent("t1", "alice", Seq("Pen", "Ink"), 1.0, ts("2024-01-01T00:00:01Z")),
-        OrderEvent("t2", "alice", Seq("Pen"), 1.0, ts("2024-01-01T00:00:02Z")),
-        OrderEvent("t3", "bob", Seq("Ink"), 1.0, ts("2024-01-01T00:00:03Z")),
-        OrderEvent("t4", "alice", Seq("Pen", "Pad", "Ink"), 1.0, ts("2024-01-01T00:00:04Z")),
-        OrderEvent("t5", "bob", Seq("Pad"), 1.0, ts("2024-01-01T00:00:05Z")))
-      ms.addData(evs.take(3)); q.processAllAvailable()
-      ms.addData(evs.drop(3)); q.processAllAvailable()
-      q.stop()
-      // latest slate per user = rows at that user's max changelog seq
-      val rows = spark.table(name).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getInt(4)))
-      val latest = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
-        val maxSeq = rs.map(_._2).max
-        rs.filter(_._2 == maxSeq).map(t => (t._1, t._3, t._4, t._5)).toSeq
-      }.toSet
-      // batch fixpoint: count occurrences across all events, top-2 by
-      // (cnt desc, product asc)
-      assert(latest === Set(
-        ("alice", "Pen", 3L, 1), ("alice", "Ink", 2L, 2),
-        ("bob", "Ink", 1L, 1), ("bob", "Pad", 1L, 2)))
-      // the first batch's alice slate was the intermediate (Pen 2, Ink 1)
-      assert(rows.filter(t => t._1 == "alice" && t._2 == 2L).map(t => (t._3, t._4)).toSet
-        === Set(("Pen", 2L), ("Ink", 1L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("mapGroupsWithState running totals reach the hand-folded fixpoint across batches") {
+  test("keyed running totals reach the hand-folded fixpoint across batches") {
     import graft.streaming.Stateful
     val (ms, df) = Sources.memoryStream[graft.streaming.OrderEvent](spark)
     val name = freshTable()
@@ -944,20 +873,9 @@ class StreamingSpec extends SparkSpec {
       OrderEvent("b1", "bob", Seq("d"), 9.0, ts("2024-01-01T00:00:05Z")))
     val flush1 = OrderEvent("z1", "zz", Seq("x"), 0.0, ts("2024-01-01T00:01:40Z"))
     val flush2 = OrderEvent("z2", "zz", Seq("x"), 0.0, ts("2024-01-01T00:03:20Z"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try {
-      runStream(Seq(evs, Seq(flush1), Seq(flush2)), "append") { df =>
-        Stateful.resampleTicks(df.as[OrderEvent], stepMs = 10000L).toDF()
-      }.filter(col("user").isin("alice", "bob"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val out = runStream(Seq(evs, Seq(flush1), Seq(flush2)), "append") { df =>
+      Stateful.resampleTicks(df.as[OrderEvent], stepMs = 10000L).toDF()
+    }.filter(col("user").isin("alice", "bob"))
     val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     // batch fixpoint on the cells both operators define (up to each key's
     // last observed bucket); the batch grid stops there, streaming keeps
@@ -979,6 +897,25 @@ class StreamingSpec extends SparkSpec {
     assert(out.groupBy("user", "gridMs").count().filter(col("count") > 1).count() === 0)
   }
 
+  test("resampleTicks on batch input equals the batch forward-fill") {
+    import graft.ops.Timeseries
+    // the grid stops at each key's last observed bucket: alice 0..20 s,
+    // bob 0 s, zz 100 s; a same-cell tie resolves to the greater value
+    val evs = Seq(
+      OrderEvent("a1", "alice", Seq("a"), 1.0, ts("2024-01-01T00:00:00Z")),
+      OrderEvent("a2", "alice", Seq("b"), 2.0, ts("2024-01-01T00:00:02Z")),
+      OrderEvent("a3", "alice", Seq("c"), 4.0, ts("2024-01-01T00:00:02Z")),
+      OrderEvent("a4", "alice", Seq("d"), 3.0, ts("2024-01-01T00:00:25Z")),
+      OrderEvent("b1", "bob", Seq("e"), 9.0, ts("2024-01-01T00:00:05Z")),
+      OrderEvent("z1", "zz", Seq("x"), 0.0, ts("2024-01-01T00:01:40Z")))
+    val got = Stateful.resampleTicks(evs.toDS(), stepMs = 10000L).toDF()
+    val batch = Timeseries.resampleFfill(col("user"), col("ts").cast("long") * 1000,
+        col("amount"), 10000L)(evs.toDF())
+      .select(col("k").as("user"), col("grid_us").as("gridMs"), col("v"))
+    assert(countsOf(got) === countsOf(batch))
+    assert(got.count() === 5)
+  }
+
   test("a late-but-in-watermark observation moves the resample grid start backward") {
     import graft.streaming.Stateful
     // allowed lateness 2 min: the first batch sees alice at 30 s, the
@@ -988,21 +925,10 @@ class StreamingSpec extends SparkSpec {
     val late = Seq(OrderEvent("a2", "alice", Seq("b"), 1.0, ts("2024-01-01T00:00:05Z")))
     val f1 = Seq(OrderEvent("z1", "zz", Seq("x"), 0.0, ts("2024-01-01T00:05:00Z")))
     val f2 = Seq(OrderEvent("z2", "zz", Seq("x"), 0.0, ts("2024-01-01T00:10:00Z")))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try {
-      runStream(Seq(b1, late, f1, f2), "append") { df =>
-        Stateful.resampleTicks(df.as[OrderEvent], stepMs = 10000L,
-          watermarkDelay = "2 minutes").toDF()
-      }.filter(col("user") === "alice")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val out = runStream(Seq(b1, late, f1, f2), "append") { df =>
+      Stateful.resampleTicks(df.as[OrderEvent], stepMs = 10000L,
+        watermarkDelay = "2 minutes").toDF()
+    }.filter(col("user") === "alice")
     val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     // final wm = 600 - 120 = 480 s → cells 0..470 s
     assert(out.count() === 48)
@@ -1022,6 +948,13 @@ class StreamingSpec extends SparkSpec {
       val out = runStream(Seq(orders.take(2), orders.drop(2)), "complete")(
         Topologies.productsPerUser(_))
       assert(rowsOf(out) === rowsOf(Topologies.productsPerUser(orders.toDF())))
+      // a keyed step on the same provider: sessionClose reaches its fixpoint
+      val flush = OrderEvent("zz", "zz", Seq("x"), 1.0, ts("2024-01-01T01:00:00Z"))
+      val sessions = sessionCols(runStream(Seq(orders, Seq(flush)), "append") { df =>
+        Stateful.sessionClose(df.as[OrderEvent], gapMs = 5000L).toDF()
+      })
+      assert(rowsOf(sessions) === rowsOf(sessionFixpoint(orders.toDF())))
+      assert(sessions.count() === 4)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -1267,14 +1200,15 @@ class StreamingSpec extends SparkSpec {
 
   /** `op` as (batch rows, streamed rows), both multisets: once on a batch
     * Dataset of all of `batches`, once streamed with each element of
-    * `batches` as one micro-batch.
+    * `batches` as one micro-batch into a `mode` sink.
     */
-  private def batchAndStream1[A: org.apache.spark.sql.Encoder, O](batches: Seq[Seq[A]])(
+  private def batchAndStream1[A: org.apache.spark.sql.Encoder, O](batches: Seq[Seq[A]],
+      mode: String = "append")(
       op: Dataset[A] => Dataset[O]): (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
     val batch = countsOf(op(batches.flatten.toDS()).toDF())
     val (ms, df) = Sources.memoryStream[A](spark)
     val name = freshTable()
-    val q = Sinks.toMemory(op(df.as[A]).toDF(), name, "append").start()
+    val q = Sinks.toMemory(op(df.as[A]).toDF(), name, mode).start()
     try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
     finally q.stop()
     (batch, countsOf(spark.table(name)))
@@ -1417,5 +1351,51 @@ class StreamingSpec extends SparkSpec {
       .map(r => Seq[Any](r.getString(0), r.getString(1)) -> r.getLong(2).toInt).toMap
     assert(clean._1 === batch)
     assert(batch === Map(Seq("a", "c") -> 1, Seq("c", "b") -> 1, Seq("b", "a") -> 2))
+  }
+
+  test("NULL-ts hostile rows: sessionClose ignores them, batch and stream") {
+    val t = (sec: Int) => ts(f"2024-01-01T00:00:$sec%02dZ")
+    val b1 = Seq(OrderEvent("a1", "alice", Nil, 1.0, t(0)),
+      OrderEvent("a2", "alice", Nil, 1.0, t(2)),
+      OrderEvent("b1", "bob", Nil, 1.0, t(1)))
+    // the flush closes every session but its own
+    val b2 = Seq(OrderEvent("a3", "alice", Nil, 1.0, t(20)),
+      OrderEvent("zz", "zz", Nil, 1.0, ts("2024-01-01T00:01:40Z")))
+    def run(nulls: Seq[OrderEvent]) = batchAndStream1(Seq(b1 ++ nulls, b2 ++ nulls))(
+      Stateful.sessionClose(_, gapMs = 5000L))
+    val clean = run(Nil)
+    assert(run(Seq(OrderEvent("aN", "alice", Nil, 1.0, null),
+      OrderEvent("bN", "bob", Nil, 1.0, null))) === clean)
+    assert(clean._1.values.sum === 4 && clean._2.values.sum === 3)
+    assert(clean._2.keySet.subsetOf(clean._1.keySet))
+  }
+
+  test("NULL-ts hostile rows: resampleTicks ignores them, batch and stream") {
+    val t = (sec: Int) => ts(f"2024-01-01T00:00:$sec%02dZ")
+    val b1 = Seq(OrderEvent("a1", "alice", Nil, 1.0, t(0)),
+      OrderEvent("a2", "alice", Nil, 2.0, t(2)),
+      OrderEvent("b1", "bob", Nil, 9.0, t(5)))
+    val b2 = Seq(OrderEvent("a3", "alice", Nil, 3.0, t(25)),
+      OrderEvent("zz", "zz", Nil, 0.0, ts("2024-01-01T00:01:40Z")))
+    def run(nulls: Seq[OrderEvent]) = batchAndStream1(Seq(b1 ++ nulls, b2 ++ nulls))(
+      Stateful.resampleTicks(_, stepMs = 10000L))
+    val clean = run(Nil)
+    assert(run(Seq(OrderEvent("aN", "alice", Nil, 7.0, null),
+      OrderEvent("bN", "bob", Nil, 7.0, null))) === clean)
+    // batch: alice 0..20 s, bob 0 s, zz 100 s; stream (watermark 100 s):
+    // alice and bob 0..90 s
+    assert(clean._1.values.sum === 5 && clean._2.values.sum === 20)
+  }
+
+  test("NULL-ts hostile rows: runningTotalsTtl ignores them, batch and stream") {
+    def run(nulls: Seq[OrderEvent]) =
+      batchAndStream1(Seq(orders.take(2) ++ nulls, orders.drop(2) ++ nulls), "update")(
+        Stateful.runningTotalsTtl(_, idleMs = 10000L))
+    val clean = run(Nil)
+    assert(run(Seq(OrderEvent("aN", "alice", Seq("x"), 5.0, null),
+      OrderEvent("dN", "dave", Nil, 5.0, null))) === clean)
+    // batch: nothing expires, so the output is runningTotals'
+    assert(clean._1 === countsOf(Stateful.runningTotals(orders.toDS()).toDF()))
+    assert(clean._2.values.sum === 4) // alice twice, bob, carol
   }
 }
