@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    cached earlier in the JVM; FileContext (checkpoint) I/O reads the
   *    conf every time.
   */
-object Engine extends org.apache.spark.internal.Logging {
+object Engine {
 
   /** The engine's session settings as data — applied by [[builder]], and
     * directly usable as `--conf` pairs on a cluster `spark-submit`.
@@ -69,23 +69,16 @@ object Engine extends org.apache.spark.internal.Logging {
   /** [[local]] with one shuffle partition per core. */
   def local(cores: Int): SparkSession = local(cores, cores)
 
-  /** Build (or join) the session and make the SQL function surface
-    * available even when the session pre-existed this call (extensions
-    * only apply at session creation; programmatic registration is
-    * idempotent, so doing both is safe). The cartesian GUARDRAIL has no
-    * post-creation registration hook — if the session pre-existed without
-    * it, `spark.graft.failOnCartesian` would silently do nothing, so that
-    * gap is logged loudly instead of masked.
+  /** Build (or join) the session and make the SQL function surface and
+    * the cartesian guardrail available even when the session pre-existed
+    * this call: extensions only apply at session creation, so both are
+    * also registered programmatically, idempotently (the guardrail as an
+    * optimizer rule, [[graft.plans.Guardrails.arm]]).
     */
   def session(master: String = "local[*]"): SparkSession = {
     val s = builder().master(master).appName("graft").getOrCreate()
     graft.functions.GraftFunctions.register(s)
-    val ext = s.conf.getOption("spark.sql.extensions").getOrElse("")
-    if (!ext.contains("GraftGuardrails"))
-      logWarning("Engine.session() joined a pre-existing SparkSession built " +
-        "without graft.plans.GraftGuardrails — spark.graft.failOnCartesian " +
-        "will have no effect in this session; use Guardrails.assertNoCartesian " +
-        "programmatically or rebuild the session through Engine.builder()")
+    graft.plans.Guardrails.arm(s)
     s
   }
 }

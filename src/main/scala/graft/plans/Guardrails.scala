@@ -1,9 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Dataset, SparkSessionExtensions}
+import org.apache.spark.sql.{Dataset, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Generate, GlobalLimit, Join, LocalRelation, LogicalPlan, OneRowRelation, UnaryNode, Unpivot}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 
 /** Plan GUARDRAILS — validation hooks for the mistakes that are merely
   * slow at test scale but fatal at 100 TB. First (and worst): the
@@ -22,15 +24,22 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Generate,
   * cartesians by intent — do not wrap them in the guard; the ANN
   * operators exist precisely so production paths never need them.
   *
-  * Two routes to the same check:
+  * Three routes to the same check:
   *  - programmatic: `Guardrails.assertNoCartesian(df)` before launch;
   *  - config: `spark.sql.extensions=graft.plans.GraftGuardrails` +
   *    `spark.graft.failOnCartesian=true` — injected as an analysis
-  *    check rule, it vets every query of the session.
+  *    check rule, it vets every query of the session;
+  *  - a session that already exists: [[arm]] adds the check as an
+  *    optimizer rule, gated by the same flag.
   */
 object Guardrails {
 
   val FlagKey = "spark.graft.failOnCartesian"
+
+  /** The flag's value turns the check on — case-insensitive: a guardrail
+    * must not fail OPEN on "True"/"TRUE".
+    */
+  private[plans] def enabled(flag: String): Boolean = flag.trim.equalsIgnoreCase("true")
 
   /** One statically-known row? (scalar aggregate, possibly under
     * projections/aliases/hints; literal relations of at most one row;
@@ -75,6 +84,28 @@ object Guardrails {
     */
   def assertNoCartesian(df: Dataset[_]): Unit =
     check(df.queryExecution.optimizedPlan)
+
+  /** [[check]] as an optimizer rule under the active session's flag; it
+    * returns every plan unchanged.
+    */
+  private object CheckRule extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = {
+      if (enabled(SQLConf.get.getConfString(FlagKey, "false"))) check(plan)
+      plan
+    }
+  }
+
+  /** Arms the check on a session that exists already (extensions apply
+    * only at session creation): adds it to `session.experimental`'s extra
+    * optimizations, once, so `spark.graft.failOnCartesian` fails a
+    * cartesian when the query is optimized. Idempotent. On a session that
+    * has the extension too, the analysis check fails first.
+    */
+  def arm(session: SparkSession): Unit = session.experimental.synchronized {
+    val x = session.experimental
+    if (!x.extraOptimizations.contains(CheckRule))
+      x.extraOptimizations = x.extraOptimizations :+ CheckRule
+  }
 }
 
 /** `spark.sql.extensions` entry point: injects [[Guardrails.check]] as an
@@ -84,8 +115,7 @@ object Guardrails {
 class GraftGuardrails extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectCheckRule { session => plan =>
-      // case-insensitive: a guardrail must not fail OPEN on "True"/"TRUE"
-      if (session.conf.get(Guardrails.FlagKey, "false").trim.equalsIgnoreCase("true"))
+      if (Guardrails.enabled(session.conf.get(Guardrails.FlagKey, "false")))
         Guardrails.check(plan)
     }
 }

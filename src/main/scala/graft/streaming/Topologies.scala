@@ -3,8 +3,10 @@ package graft.streaming
 import java.util.concurrent.TimeUnit
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.Relational
 
@@ -153,12 +155,16 @@ object Topologies {
   /** `paidOrdersTopology` — the flagship (KSA:155-189):
     *
     *  - J1 (KSA:162-165): orders ⋈ profiles on the user key. The profile
-    *    KTable maps to a stream-static join: each micro-batch sees the
-    *    table's current snapshot — the closest Spark analog of "current
-    *    value of the changelog" (SURVEY §7 "what's hard" #1).
-    *  - J2 (KSA:167-171): ⋈ broadcast discounts on the profile extracted
-    *    from the in-flight value; the GlobalKTable IS a broadcast dim.
-    *    Joiner applies `amount * discount.amount` (KSA:170).
+    *    KTable maps to a static table. The static tables are read once,
+    *    when the topology is built, which runs their join's Spark jobs
+    *    then: restart the query to pick up a new version, or use
+    *    [[Stateful.streamTableJoinExact]] for a changelog table. A
+    *    profile table too large to broadcast stays a stream-static join,
+    *    rescanned every micro-batch, with no promise about which version
+    *    a micro-batch sees.
+    *  - J2 (KSA:167-171): ⋈ discounts on the profile extracted from the
+    *    in-flight value; the GlobalKTable IS a replicated dim. Joiner
+    *    applies `amount * discount.amount` (KSA:170).
     *  - P4 (KSA:173): re-key by orderId — declared by selection; the
     *    exchange materializes at the next keyed operator.
     *  - J3 (KSA:177-186): ⋈ payments within ±`joinWindow` (bounds
@@ -209,20 +215,81 @@ object Topologies {
     intervalJoin(enrichedRekeyed(orders, profiles, discounts, joinWindow),
       payments, joinWindow, "full_outer")
 
-  /** Shared J1→J2→P4 prefix of the flagship: profile snapshot join,
-    * broadcast discount join with the discount applied, re-key by orderId.
+  /** Shared J1→J2→P4 prefix of the flagship: profile join, discount join
+    * with the discount applied, re-key by orderId.
+    *
+    * Where the plain plan would broadcast both static sides (see
+    * [[staticLookup]]) they are joined to each other once, here, and each
+    * order looks its user up in the result: one output row per match, so
+    * a NULL or unknown user matches nothing and duplicate profiles or
+    * discounts multiply, as in the joins. That drops the two static-side
+    * broadcasts every micro-batch would otherwise rebuild. Otherwise the
+    * profiles are a stream-static join and the discounts a broadcast join.
     */
   private def enrichedRekeyed(orders: DataFrame, profiles: DataFrame,
       discounts: DataFrame, joinWindow: String): DataFrame = {
-    val withProfile = Relational.streamTableJoin(profiles, Seq("user"))(
-      orders.withWatermark("ts", joinWindow))
-    val discounted = Relational.globalTableJoin(
-        discounts.withColumnRenamed("amount", "discount")
-          .withColumnRenamed("profile", "d_profile"),
-        col("profile") === col("d_profile"))(withProfile)
-      .withColumn("amount", col("amount") * col("discount"))
-      .drop("discount", "d_profile")
+    val watermarked = orders.withWatermark("ts", joinWindow)
+    val discounted = staticLookup(profiles, discounts) match {
+      case Some(lookup) =>
+        watermarked.withColumn("discount", explode(lookup(col("user"))))
+          .withColumn("profile", col("discount._1"))
+          .withColumn("amount", col("amount") * col("discount._2"))
+          .drop("discount")
+      case None =>
+        Relational.globalTableJoin(
+            discounts.withColumnRenamed("amount", "discount")
+              .withColumnRenamed("profile", "d_profile"),
+            col("profile") === col("d_profile"))(
+            Relational.streamTableJoin(profiles, Seq("user"))(watermarked))
+          .withColumn("amount", col("amount") * col("discount"))
+          .drop("discount", "d_profile")
+    }
     Relational.selectKey(col("orderId"), "key")(discounted)
+  }
+
+  /** The largest profile table, by the optimizer's estimate, that
+    * [[staticLookup]] collects.
+    */
+  private val LookupMaxBytes = 10L << 20
+
+  /** J1 ⋈ J2 as one lookup `user → [(profile, discount)]`, built once: the
+    * static sides' inner join is collected (its jobs run here, at
+    * construction) and broadcast with the `SparkContext`, and the returned
+    * function looks a user up in it. Taken only where the plain plan
+    * already broadcasts both sides: neither input streams, the profiles'
+    * optimizer size estimate is within `spark.sql.autoBroadcastJoinThreshold`
+    * (J2's dim is always broadcast) and the columns have the flagship's
+    * types (string user and profile, double discount). The lookup is a
+    * boxed Scala map on the driver and on every executor, several times
+    * the size of the hashed relation a broadcast join would ship, so it is
+    * also capped at [[LookupMaxBytes]] whatever the threshold. Other
+    * column types keep the joins, which carry Spark's own coercion rules.
+    * `None` otherwise.
+    */
+  private def staticLookup(profiles: DataFrame,
+      discounts: DataFrame): Option[UserDefinedFunction] = {
+    val spark = profiles.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def typed(df: DataFrame, cols: (String, DataType)*) =
+      cols.forall { case (c, t) => df.schema.find(_.name == c).exists(_.dataType == t) }
+    val eligible = !profiles.isStreaming && !discounts.isStreaming &&
+      typed(profiles, "user" -> StringType, "profile" -> StringType) &&
+      typed(discounts, "profile" -> StringType, "amount" -> DoubleType) && {
+        val size = profiles.queryExecution.optimizedPlan.stats.sizeInBytes
+        size >= 0 && size <= math.min(threshold, LookupMaxBytes)
+      }
+    Option.when(eligible) {
+      val matches = profiles.select("user", "profile")
+        .join(discounts.select(col("profile").as("d_profile"), col("amount").as("discount")),
+          col("profile") === col("d_profile"))
+        .filter(col("user").isNotNull)
+        .select("user", "profile", "discount")
+        .collect()
+        .groupMap(_.getString(0))(r => (r.getString(1), Option.unless(r.isNullAt(2))(r.getDouble(2))))
+        .map { case (user, ms) => user -> ms.toSeq }
+      val table = spark.sparkContext.broadcast(matches)
+      udf((user: String) => table.value.getOrElse(user, Nil))
+    }
   }
 
   /** J3: `key = payment.orderId AND payment.ts BETWEEN ts ± joinWindow`,

@@ -4,7 +4,10 @@ import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The session front door: configs-as-data and function availability. */
+import org.apache.spark.sql.{GraftSqlTestBridge, SparkSession}
+import graft.plans.Guardrails
+
+/** The session front door: configs-as-data, function and guardrail availability. */
 class EngineSpec extends SparkSpec {
 
   test("sessionConfigs pin the cross-engine determinism and extension settings") {
@@ -49,6 +52,26 @@ class EngineSpec extends SparkSpec {
       // idempotent: calling again must not throw on re-registration
       Engine.session()
     } finally graft.functions.GraftFunctions.register(spark)
+  }
+
+  test("session() arms the cartesian guardrail on a session built without the extension") {
+    // a session of the same context with no extensions at all: its conf
+    // still lists the context's static `spark.sql.extensions`
+    val bare = GraftSqlTestBridge.sessionWithoutExtensions(spark)
+    val cross = bare.range(3).crossJoin(bare.range(4).withColumnRenamed("id", "j"))
+    bare.conf.set(Guardrails.FlagKey, "true")
+    assert(cross.count() === 12L) // unarmed: the flag does nothing
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(bare)
+    try {
+      assert(Engine.session() eq bare)
+      val err = intercept[IllegalStateException] { cross.count() }
+      assert(err.getMessage.contains("cartesian"))
+      Engine.session() // idempotent: the rule is added once
+      assert(bare.experimental.extraOptimizations.size === 1)
+      bare.conf.set(Guardrails.FlagKey, "false")
+      assert(cross.count() === 12L)
+    } finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
   }
 
   private def scalaFiles(root: String): Seq[Path] =
